@@ -3473,8 +3473,9 @@ object TrainingData {
       dampingPct: Int = 85, truncateEvery: Int = 8): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    require(truncateEvery >= 1,
-      s"truncateEvery must be >= 1, got $truncateEvery")
+    require(truncateEvery >= 1 && truncateEvery <= 16,
+      s"truncateEvery must be in [1, 16] (a plan-size guard: each lazy " +
+        s"round adds a join and an aggregation to the plan), got $truncateEvery")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0, 100], got $dampingPct")
     val e0 = pairs
@@ -3528,23 +3529,21 @@ object TrainingData {
     *
     * Scale shape: per round one equi-join on src + one aggregation —
     * the x72 shape; `iterations` bounds total work; lineage truncated
-    * every `truncateEvery` rounds (localCheckpoint) so the loop never
-    * stacks unbounded plans. UNLIKE the x72 shape, rounds here must NOT
+    * after every round (localCheckpoint) so the loop never stacks
+    * unbounded plans. UNLIKE the x72 shape, rounds here must NOT
     * compose lazily: the max-normalization references its round's sums
     * relation twice (the broadcast max and the normalized scores), so a
     * lazy chunk's plan — and the executed work: the duplicated
     * aggregate feeds a BROADCAST on one branch and a projection on the
     * other, shapes runtime exchange reuse does not unify — DOUBLES per
-    * round. Measured (r17, sf0.1): truncateEvery=2 ⇒ 5.6–10 s warm vs
-    * 2.1 s at 1. The default stays 1 (per-round truncation); the only
-    * lazy round is the LAST, whose checkpoint nobody re-reads. */
+    * round. Measured (r17, sf0.1): truncating every 2nd round ⇒
+    * 5.6–10 s warm vs 2.1 s every round, and every interval above 1
+    * measured 2.7–4.8× slower. The only lazy round is the LAST, whose
+    * checkpoint nobody re-reads. */
   def eigenvectorCentrality(pairs: DataFrame,
-      iterations: Int = 5, truncateEvery: Int = 1): DataFrame = {
+      iterations: Int = 5): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
-    require(truncateEvery >= 1 && truncateEvery <= 4,
-      s"truncateEvery must be in [1, 4] (executed work doubles per " +
-        s"lazy round), got $truncateEvery")
     val e0 = pairs
       .select(least(col("d1"), col("d2")).as("a"),
         greatest(col("d1"), col("d2")).as("b"))
@@ -3566,9 +3565,8 @@ object TrainingData {
         .select(col("id"),
           expr("CAST((1000000 * CAST(s AS DECIMAL(38,0))) div mx" +
             " AS BIGINT)").as("e"))
-      // truncate lineage only at chunk boundaries (see docstring)
-      if (i % truncateEvery == 0 && i < iterations)
-        score = score.localCheckpoint(true)
+      // truncate lineage after every round but the last (see docstring)
+      if (i < iterations) score = score.localCheckpoint(true)
     }
     deg.join(score, Seq("id"))
       .select(col("id"), col("degree"), col("e").as("eigen_micro"))

@@ -1,8 +1,11 @@
 package graft.replay
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.FutureAction
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Structured Streaming form of the replay pipeline (SURVEY.md §2A R8/R14
   * mapping): `readStream` text source → parse → bounded reorder → paced
@@ -29,6 +32,13 @@ import org.apache.spark.sql.streaming.Trigger
   * cluster — is never the throughput bound. The horizontally-scalable form
   * of replay is the batch path ([[ReplayJob]]): a range-partitioned total
   * sort with per-partition pacing and no driver-side state.
+  *
+  * Driver memory: each micro-batch is collected one partition per job,
+  * with up to `defaultParallelism` jobs running at once, and fed to the
+  * buffer in partition-index order, the order a sequential scan would
+  * give, so ties in event time keep their scan order. The driver holds at
+  * most `defaultParallelism` collected partitions plus the buffer's
+  * `readerBufferSize` events (see [[run]]).
   *
   * Durability contract: `run()` is SINGLE-SHOT, like the reference's
   * in-process queue. Micro-batches commit to the (ephemeral, default)
@@ -145,11 +155,15 @@ object StreamingReplay {
     * over `senderParallelism` lanes, each a contiguous time slice
     * (per-lane event-time order, like the batch path).
     *
-    * Driver-memory bound: micro-batch rows stream through
-    * `toLocalIterator` (one task's partition at a time, never the whole
-    * batch), and the buffer holds at most `cfg.readerBufferSize` events
-    * before force-releasing — one oversized input file cannot OOM the
-    * driver. See the class scaladoc for the single-shot durability
+    * Driver-memory bound: the driver holds at most `defaultParallelism`
+    * collected partitions of rows (never the whole batch; a partition is
+    * at most one `spark.sql.files.maxPartitionBytes` split, or one whole
+    * unsplittable compressed file) plus the buffer's
+    * `cfg.readerBufferSize` events, past which it force-releases — one
+    * oversized input file cannot grow the buffer without limit. Each
+    * collect job returns one partition, so `spark.driver.maxResultSize`
+    * applies per partition, never to several at once. See the class
+    * scaladoc for the parallel collect and the single-shot durability
     * contract. */
   def run(spark: SparkSession, cfg: ReplayConfig, sender: RecordSender,
       nowMs: () => Long = () => System.currentTimeMillis(),
@@ -195,17 +209,40 @@ object StreamingReplay {
         .writeStream
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // rows stream driver-side one partition at a time; the buffer's
-          // capacity (not the batch size) bounds held memory, releasing
-          // mid-batch whenever the cap is crossed
-          val rows = batch
+          // one single-task job per partition, as a per-partition iterator
+          // would run, but up to defaultParallelism of them in flight at
+          // once instead of one at a time. A job's result is one partition,
+          // so spark.driver.maxResultSize still bounds a partition, not a
+          // batch. Partitions are consumed in index order, so rows reach the
+          // buffer in the order of a sequential scan: the (ms, seq)
+          // tie-break is unchanged, and the buffer's capacity still releases
+          // mid-batch on overflow.
+          val sc = spark.sparkContext
+          val rdd = batch
             .select(col("payload"), unix_millis(col("timestamp")).as("ms"))
-            .toLocalIterator()
-          while (rows.hasNext) {
-            val r = rows.next()
-            buffer.add(r.getLong(1), r.getString(0))
-            if (buffer.size > cfg.readerBufferSize) emit(buffer.release())
+            .rdd
+          def collect(p: Int): FutureAction[Array[(Long, String)]] = {
+            var got: Array[(Long, String)] = null
+            sc.submitJob(rdd,
+              (it: Iterator[Row]) => it.map(r => (r.getLong(1), r.getString(0))).toArray,
+              Seq(p), (_: Int, part: Array[(Long, String)]) => got = part, got)
           }
+          val parts = rdd.getNumPartitions
+          val inFlight = scala.collection.mutable.Queue.empty[FutureAction[Array[(Long, String)]]]
+          var next = 0
+          try {
+            while (next < parts || inFlight.nonEmpty) {
+              while (next < parts && inFlight.size < sc.defaultParallelism) {
+                inFlight.enqueue(collect(next)); next += 1
+              }
+              val part = Await.result(inFlight.head, Duration.Inf)
+              inFlight.dequeue()
+              for ((ms, payload) <- part) {
+                buffer.add(ms, payload)
+                if (buffer.size > cfg.readerBufferSize) emit(buffer.release())
+              }
+            }
+          } finally inFlight.foreach(_.cancel()) // a failed batch leaves no jobs behind
           emit(buffer.release())
           ()
         }

@@ -196,6 +196,17 @@ class TrainingDataSpec extends SparkSpec {
     assert(got.size == 5)
   }
 
+  test("pageRankMicro bounds truncateEvery to [1, 16] as a plan-size guard") {
+    val pairs = Seq((1L, 2L)).toDF("d1", "d2")
+    for (bad <- Seq(0, 17)) {
+      val e = intercept[IllegalArgumentException](
+        TrainingData.pageRankMicro(pairs, truncateEvery = bad))
+      assert(e.getMessage.contains("truncateEvery must be in [1, 16]"), e.getMessage)
+    }
+    assert(TrainingData.pageRankMicro(pairs, iterations = 2, truncateEvery = 16)
+      .count() == 2)
+  }
+
   test("hardNegatives sit strictly below the positive threshold, ranked densely") {
     val vecs = Seq(
       (1L, Seq(1f, 0f, 0f, 0f)), // query

@@ -215,8 +215,8 @@ class ReplayE2ESpec extends SparkSpec {
   test("streaming replay: one oversized file completes under a hard buffer capacity") {
     // 500 shuffled events in a SINGLE file — maxFilesPerTrigger can't bound
     // this; the buffer's hard capacity (readerBufferSize=10) must: rows
-    // stream through toLocalIterator and the buffer force-releases oldest
-    // past the cap, so driver-held state stays ~10 events at any moment
+    // are fed to the buffer one at a time and it force-releases oldest
+    // past the cap, so the buffer holds ~10 events at any moment
     val dir = Files.createTempDirectory("replay_fat")
     val rng = new scala.util.Random(7)
     val rows = rng.shuffle((1 to 500).toList).map { i =>
@@ -234,6 +234,123 @@ class ReplayE2ESpec extends SparkSpec {
     // forced releases may reorder beyond the 10-event horizon, but nothing
     // is ever dropped
     assert(ids(CollectingSender.payloads).sorted == (1 to 500).toList)
+  }
+
+  /** `files` plain JSON-lines files, all events at ONE event time. File k
+    * holds `files + 2 - k` lines, so sizes fall strictly with k; the file
+    * source orders a batch's partitions by size (largest first), so with
+    * one file per partition, partition index k is file k. */
+  private def sameTimeFiles(files: Int): (String, Seq[String]) = {
+    val dir = Files.createTempDirectory("replay_same_time")
+    val byFile = (0 until files).map { k =>
+      (0 until files + 2 - k).map(l =>
+        f"""{"id":${k * 100 + l},"dropoff_datetime":"2024-01-01T00:00:00Z"}""")
+    }
+    byFile.zipWithIndex.foreach { case (lines, k) =>
+      Files.write(dir.resolve(f"part-$k%02d.jsonl"), lines.mkString("\n").getBytes(UTF_8))
+    }
+    (dir.toString, byFile.flatten.map(_ + "\n"))
+  }
+
+  /** Runs `body` with every small file in a partition of its own: below
+    * the 4 MiB open cost, a split size of 1 MiB never packs two files. */
+  private def onePartitionPerFile[T](body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1m")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("streaming replay collects a micro-batch one partition per job, up to defaultParallelism at once, in partition order") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val files = 10
+    val (dir, expected) = sameTimeFiles(files)
+    // collect jobs read the input files (a FileScanRDD in their stage);
+    // emit jobs only parallelize released events
+    val collectTasks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val running = scala.collection.mutable.Set.empty[Int] // listener-bus thread only
+    var mostAtOnce = 0
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.job.description") == "replay-done-marker"))
+          marker.countDown()
+        else if (e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD"))) {
+          collectTasks.add((props.map(_.getProperty("streaming.sql.batchId")).orNull,
+            e.stageInfos.map(_.numTasks).sum))
+          running += e.jobId
+          mostAtOnce = math.max(mostAtOnce, running.size)
+        }
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running -= e.jobId
+    }
+    val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    def replay(): (Long, Seq[String]) = {
+      CollectingSender.clear()
+      val sent = onePartitionPerFile(StreamingReplay.run(spark, cfg, new CollectingSender(),
+        nowMs = () => Long.MaxValue, sleeper = _ => ()))
+      (sent, CollectingSender.payloads)
+    }
+    sc.addSparkListener(listener)
+    val (sent, first) =
+      try {
+        val r = replay()
+        // listener events arrive in order: once this job's start is seen,
+        // every job of the replay has been counted
+        sc.setJobDescription("replay-done-marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        r
+      } finally sc.removeSparkListener(listener)
+    val jobs = collectTasks.toArray(Array.empty[(String, Int)]).toSeq
+    val slots = sc.defaultParallelism
+    assert(files > slots, s"the test needs more partitions than defaultParallelism=$slots")
+    assert(jobs.map(_._1).distinct.size == 1, s"one AvailableNow trigger expected: $jobs")
+    // one single-task job per partition: a job's result is one partition
+    assert(jobs.size == files && jobs.forall(_._2 == 1), s"collect jobs: $jobs")
+    assert(mostAtOnce <= slots, s"$mostAtOnce collect jobs at once")
+    assert(mostAtOnce > 1, "collect jobs ran one at a time")
+    // identical event times: the (ms, seq) tie-break keeps arrival order,
+    // which is partition index, then line
+    assert(sent == expected.size)
+    assert(first == expected)
+    assert(replay() == ((expected.size.toLong, expected)))
+  }
+
+  test("streaming replay progress still counts every input line (numInputRows)") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val (dir, expected) = sameTimeFiles(10)
+    // one line no parse can keep: input rows count lines read, not sent
+    Files.write(Paths.get(dir, "part-99.jsonl"), "not json".getBytes(UTF_8))
+    val inputRows = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.add(e.progress.numInputRows)
+      // posted after the query's last progress event, on the same bus
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.countDown()
+    }
+    val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 2)
+    CollectingSender.clear()
+    spark.streams.addListener(listener)
+    val sent =
+      try {
+        val n = StreamingReplay.run(spark, cfg, new CollectingSender(),
+          nowMs = () => Long.MaxValue, sleeper = _ => (), maxFilesPerTrigger = 3)
+        assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        n
+      } finally spark.streams.removeListener(listener)
+    assert(sent == expected.size)
+    val perTrigger = inputRows.toArray(Array.empty[java.lang.Long]).map(_.longValue).toSeq
+    assert(perTrigger.count(_ > 0) == 4, s"11 files at 3 per trigger: $perTrigger")
+    assert(perTrigger.sum == expected.size + 1, s"per trigger: $perTrigger")
   }
 
   test("framed .json.lz4 input (the reference's default dataset format) replays byte-exactly (R2)") {
