@@ -6,7 +6,7 @@ package graft.replay
   * binds `software.amazon.awssdk` entirely via reflection: it COMPILES
   * without the SDK and ACTIVATES when the jars are present at runtime
   * (spark-submit `--jars`). Everything protocol-shaped stays in [[Sink]] —
-  * ≤500-record batches, partial-failure requeue, `min(2000, 2^a·100)`
+  * ≤500-record, ≤5 MiB batches, partial-failure requeue, `min(2000, 2^a·100)`
   * backoff (KinesisProducer.java:139-169) — this class maps exactly one
   * batch to one `PutRecords` call and reports the failed indices:
   *

@@ -44,8 +44,9 @@ object ReplayJob {
       .orderBy(col("timestamp")) // R8: total sort ≥ the reference's bounded reorder
 
   /** Run the replay: pace each event to its simulated ingestion time and
-    * push through the sender in ≤500-record batches. Sender parallelism =
-    * sink partitions (reference: 4 sender threads, RePlayer.java:28).
+    * push through the sender in requests of ≤500 records and ≤5 MiB.
+    * Sender parallelism = sink partitions (reference: 4 sender threads,
+    * RePlayer.java:28).
     *
     * Pacing sleeps inside sink tasks; with senderParallelism ≪ cores this
     * holds few cores, and at high speedup the sleeps vanish — the

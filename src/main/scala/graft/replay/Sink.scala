@@ -70,6 +70,14 @@ object Sink {
   val MaxEntriesPerRequest = 500 // KinesisProducer.java:25
   val MaxBackoffMillis = 2000L // KinesisProducer.java:26
   val MaxRetryCount = 100 // KinesisProducer.java:27
+  // PutRecords limits (https://docs.aws.amazon.com/kinesis/latest/APIReference/API_PutRecords.html):
+  // a record's data blob is at most 1 MiB, and a request at most 5 MiB
+  // including partition keys. A partition key is at most 256 characters;
+  // requests are sized as if every key were that long, so the limit holds
+  // whatever key a RecordSender picks.
+  val MaxRecordBytes = 1024 * 1024
+  val MaxRequestBytes = 5L * 1024 * 1024
+  val PartitionKeyBytes = 256
 
   /** `min(2000, 2^attempt * 100)` ms — 200, 400, 800, 1600, 2000, 2000…
     * (KinesisProducer.java:143-156). The shift is clamped first: beyond
@@ -100,17 +108,49 @@ object Sink {
     retries
   }
 
-  /** Drain an iterator through the sender in ≤500-record batches with the
-    * reference's retry protocol. Returns (records sent, retries performed). */
-  def sendAll(records: Iterator[Array[Byte]], sender: RecordSender,
-      sleeper: Long => Unit = Thread.sleep): (Long, Long) = {
+  /** A record Kinesis would reject fails the task before it is sent: no
+    * retry can make it fit. */
+  private def requireSendable(payload: Array[Byte]): Unit =
+    require(payload.length <= MaxRecordBytes,
+      s"record payload of ${payload.length} bytes exceeds the PutRecords " +
+        s"limit of $MaxRecordBytes bytes per record")
+
+  /** The pending request: flushed before it would pass 500 records or
+    * 5 MiB. Counts the records it sent and the retries it made. */
+  private final class Request(sender: RecordSender, sleeper: Long => Unit) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    private var bytes = 0L
     var sent = 0L
     var retries = 0L
-    records.grouped(MaxEntriesPerRequest).foreach { batch =>
-      retries += sendWithRetry(batch, sender, sleeper)
-      sent += batch.size
+
+    def add(payload: Array[Byte]): Unit = {
+      val cost = payload.length.toLong + PartitionKeyBytes
+      if (bytes + cost > MaxRequestBytes) flush()
+      buf += payload
+      bytes += cost
+      if (buf.size >= MaxEntriesPerRequest) flush()
     }
-    (sent, retries)
+
+    def flush(): Unit = if (buf.nonEmpty) {
+      retries += sendWithRetry(buf.toSeq, sender, sleeper)
+      sent += buf.size
+      buf.clear()
+      bytes = 0L
+    }
+  }
+
+  /** Drain an iterator through the sender in requests of ≤500 records and
+    * ≤5 MiB with the reference's retry protocol. Returns (records sent,
+    * retries performed). */
+  def sendAll(records: Iterator[Array[Byte]], sender: RecordSender,
+      sleeper: Long => Unit = Thread.sleep): (Long, Long) = {
+    val request = new Request(sender, sleeper)
+    records.foreach { payload =>
+      requireSendable(payload)
+      request.add(payload)
+    }
+    request.flush()
+    (request.sent, request.retries)
   }
 
   /** R9+R10 — paced, batched drain: each record is paced to its simulated
@@ -118,9 +158,9 @@ object Sink {
     * already-due records are never held back behind a not-yet-due one, the
     * way the reference's senders drain partial batches immediately
     * (KinesisProducer.java:112-120). At high speedup no sleeps occur and
-    * batches fill to the 500 cap; at low speedup this degrades gracefully
-    * to per-record sends instead of holding the head of a batch up to a
-    * 500-record schedule span.
+    * batches fill to the 500-record or 5 MiB cap; at low speedup this
+    * degrades gracefully to per-record sends instead of holding the head
+    * of a batch up to a 500-record schedule span.
     *
     * `onPaced(gapMs)` fires once per record with its replay lag (now − due,
     * negative = slept), for stats. Returns (records sent, retries). */
@@ -128,28 +168,21 @@ object Sink {
       nowMs: () => Long = () => System.currentTimeMillis(),
       sleeper: Long => Unit = Thread.sleep,
       onPaced: Long => Unit = _ => ()): (Long, Long) = {
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    var sent = 0L
-    var retries = 0L
-    def flush(): Unit = if (buf.nonEmpty) {
-      retries += sendWithRetry(buf.toSeq, sender, sleeper)
-      sent += buf.size
-      buf.clear()
-    }
+    val request = new Request(sender, sleeper)
     records.foreach { case (dueMs, payload) =>
+      requireSendable(payload)
       // flush BEFORE any pacing sleep, then pace against a FRESH clock
       // read: the flush itself can take arbitrarily long (network, retry
       // backoff), and sleeping a gap computed before it would add the
       // flush duration on top of the schedule, delivering late and
       // reporting the stale pre-flush gap as an on-time sleep
-      if (nowMs() < dueMs) flush()
+      if (nowMs() < dueMs) request.flush()
       val gap = Pace.paceTo(dueMs, nowMs, sleeper)
       onPaced(gap)
-      buf += payload
-      if (buf.size >= MaxEntriesPerRequest) flush()
+      request.add(payload)
     }
-    flush()
-    (sent, retries)
+    request.flush()
+    (request.sent, request.retries)
   }
 }
 

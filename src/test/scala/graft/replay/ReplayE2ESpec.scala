@@ -402,6 +402,23 @@ class ReplayE2ESpec extends SparkSpec {
     assert(ids(CollectingSender.payloads) == Seq(1, 2, 3, 4))
   }
 
+  test("lz4-java, skippable and linked-block frames in one .json.lz4 replay byte-exactly (R2)") {
+    import FramedLz4CodecSpec._
+    import net.jpountz.lz4.LZ4FrameOutputStream.FLG
+    val dir = Files.createTempDirectory("replay_lz4_mixed")
+    val parts = Seq(lines(0, 40), lines(40, 40), lines(80, 40))
+    Files.write(dir.resolve("trips.json.lz4"),
+      lz4Java(text(parts(0)), FLG.Bits.BLOCK_CHECKSUM, FLG.Bits.CONTENT_CHECKSUM) ++
+        Skippable ++ linked(text(parts(1))) ++ lz4Java(text(parts(2))))
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    CollectingSender.clear()
+    val sent = ReplayJob.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ())
+    assert(sent == 120)
+    assert(CollectingSender.payloads == parts.flatten.map(_ + "\n"))
+  }
+
   test("suffix skip matches the full path like the reference's key.endsWith — batch and streaming agree") {
     // a suffix spanning '/' (an object-key suffix, e.g. `meta/README.md`)
     // must skip in BOTH paths; a name-only match skips nothing in batch

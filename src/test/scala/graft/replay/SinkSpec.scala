@@ -21,6 +21,44 @@ class SinkSpec extends AnyFunSuite {
     assert(seen.toSeq == Seq(500, 500, 203))
   }
 
+  /** Both drains over the same payloads, paced never to sleep. */
+  private def drains(payloads: () => Iterator[Array[Byte]], sender: RecordSender) = Seq(
+    "sendAll" -> (() => Sink.sendAll(payloads(), sender)),
+    "sendScheduled" -> (() => Sink.sendScheduled(payloads().map(0L -> _), sender,
+      nowMs = () => Long.MaxValue, sleeper = _ => ())))
+
+  test("requests stay within 5 MiB, counting a 256-byte partition key per record") {
+    val seen = scala.collection.mutable.ArrayBuffer[Seq[Array[Byte]]]()
+    val sender = new RecordSender {
+      def send(records: Seq[Array[Byte]]): Seq[Int] = { seen += records; Nil }
+    }
+    for ((name, drain) <- drains(() => Iterator.fill(500)(new Array[Byte](11 * 1024)), sender)) {
+      seen.clear()
+      val (sent, retries) = drain()
+      assert(sent == 500 && retries == 0, name)
+      // 500 × (11 KiB + 256 B) = 5.5 MiB: 455 records fill the first request
+      assert(seen.map(_.size).toSeq == Seq(455, 45), name)
+      assert(seen.forall(_.map(_.length.toLong + Sink.PartitionKeyBytes).sum <=
+        Sink.MaxRequestBytes), name)
+    }
+  }
+
+  test("a payload over 1 MiB fails the task before anything is sent, naming its size") {
+    var sends = 0
+    val sender = new RecordSender {
+      def send(records: Seq[Array[Byte]]): Seq[Int] = { sends += records.size; Nil }
+    }
+    val oversized = () => Iterator(bytes("a"), new Array[Byte](Sink.MaxRecordBytes + 1))
+    for ((name, drain) <- drains(oversized, sender)) {
+      val e = intercept[IllegalArgumentException](drain())
+      assert(e.getMessage.contains(s"${1024 * 1024 + 1} bytes"), name)
+      assert(sends == 0, name)
+    }
+    // exactly 1 MiB is within the limit
+    for ((name, drain) <- drains(() => Iterator(new Array[Byte](Sink.MaxRecordBytes)), sender))
+      assert(drain() == ((1L, 0L)), name)
+  }
+
   test("partial failures are retried with backoff, only failed subset resent") {
     val sends = scala.collection.mutable.ArrayBuffer[Seq[String]]()
     val sleeps = scala.collection.mutable.ArrayBuffer[Long]()
