@@ -85,20 +85,8 @@ object Bench {
     val results = qseq.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % 16 == 0) canary += ((i, canaryOnce()))
       // (elapsed, ok, stolen): each run carries its own hypervisor-steal
-      // verdict — /proc/stat steal read around the timed region (r16:
-      // this box's host steals vCPUs for multi-second stretches; steal
-      // during a run > max(0.1 s, 15% of elapsed) marks the run as
-      // box-distorted, the DIRECT form of the canary's inference)
-      def once(): (Double, Boolean, Boolean) = {
-        val s0 = graft.tools.BenchSession.stealSeconds()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-        val el = (System.nanoTime() - t0) / 1e9
-        val st = graft.tools.BenchSession.stealSeconds() - s0
-        (el, ok, !st.isNaN && st > math.max(0.1, el * 0.15))
-      }
+      // verdict (see BenchSession.timeOnce)
+      def once(): (Double, Boolean, Boolean) = BenchSession.timeOnce(name, fn, spark, sfDir)
       // min over SUCCESSFUL runs only — a fast-failing run must not be
       // reported as a query's steady-state latency. A query that fails
       // BOTH runs goes under "errors", NOT into the timing map: a
@@ -106,8 +94,8 @@ object Bench {
       // any tool that sums or diffs the timings.
       // scrub (evict + one GC pass) runs OUTSIDE the timed region so a
       // query is billed for its own allocation, not its predecessors'
-      // collection (r16 LitterProbe: x167 warm 86 s unscrubbed vs 1.6 s)
-      graft.tools.BenchSession.scrub()
+      // collection (r16 litter probe: x167 warm 86 s unscrubbed vs 1.6 s)
+      BenchSession.scrub()
       val runs = Seq(once(), once()) // head = cold, last = warm
       val good = runs.filter(_._2).map(r => (r._1, r._3))
       val minV = good.map(_._1).minOption
@@ -154,15 +142,7 @@ object Bench {
       case ((name, Some(v), runs, minStolen), i)
           if (suspectIdx(i) || minStolen) && v >= 0.2 && retimed.size < 96 =>
         val fn = qseq(i)._2
-        def retimeOnce(): (Double, Boolean, Boolean) = {
-          val s0 = graft.tools.BenchSession.stealSeconds()
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          val el = (System.nanoTime() - t0) / 1e9
-          val st = graft.tools.BenchSession.stealSeconds() - s0
-          (el, ok, !st.isNaN && st > math.max(0.1, el * 0.15))
-        }
+        def retimeOnce(): (Double, Boolean, Boolean) = BenchSession.timeOnce(name, fn, spark, sfDir)
         val first = retimeOnce()
         val attempts = if (first._2 && !first._3) Seq(first)
           else Seq(first, retimeOnce())

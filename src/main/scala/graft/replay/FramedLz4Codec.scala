@@ -2,8 +2,6 @@ package graft.replay
 
 import java.io.{BufferedInputStream, EOFException, FilterInputStream, IOException, InputStream, OutputStream}
 
-import scala.annotation.tailrec
-
 import net.jpountz.lz4.LZ4FrameInputStream
 import org.apache.commons.compress.compressors.{CompressorException, CompressorStreamFactory}
 import org.apache.commons.compress.compressors.lz4.{FramedLZ4CompressorInputStream, FramedLZ4CompressorOutputStream}
@@ -22,8 +20,11 @@ import org.apache.hadoop.io.compress.{CompressionCodec, CompressionInputStream, 
   * Spark-first mapping: Hadoop codecs are chosen by extension, so this
   * codec takes over the `.lz4` extension (registered last in
   * `io.compression.codecs`, so it wins the factory's extension map) and
-  * re-creates the reference's content detection INSIDE the codec. Routes,
-  * tried in this order:
+  * re-creates the reference's content detection INSIDE the codec. Leading
+  * skippable frames (magic 0x184D2A5?, which LZ4 and zstd share and which
+  * carry no data in either) are skipped first, so the first real frame's
+  * magic picks the route; if no compressor magic follows them, the file
+  * raises `IOException`. Routes, tried in this order:
   *
   *  1. LZ4 frame magic → decoded frame by frame, each frame routed by its
   *     own header (magic, FLG and BD bytes; see [[FramedLz4Codec.lz4JavaReads]]):
@@ -77,6 +78,10 @@ class FramedLz4Codec extends CompressionCodec with Configurable {
   override def createInputStream(in: InputStream): CompressionInputStream = {
     // mark/reset-capable stream so the factory can sniff then rewind
     val buffered = new BufferedInputStream(in, FramedLz4Codec.BufferBytes)
+    // LZ4 and zstd share the skippable-frame magic, which the factory
+    // reads as zstd: skip leading skippable frames (they carry no data in
+    // either format) so the first real frame's magic picks the decoder
+    val skipped = FramedLz4Codec.skipSkippableFrames(buffered)
     try {
       val detected = CompressorStreamFactory.detect(buffered) match { // magic bytes
         case CompressorStreamFactory.LZ4_FRAMED =>
@@ -90,6 +95,8 @@ class FramedLz4Codec extends CompressionCodec with Configurable {
       }
       new FramedLz4Codec.DelegatedInputStream(detected, buffered)
     } catch {
+      case e: CompressorException if skipped =>
+        throw new IOException("skippable frames not followed by a compressed frame", e)
       case _: CompressorException =>
         if (FramedLz4Codec.looksLikeBlockLz4(buffered,
             FramedLz4Codec.maxBlockBytes(conf))) {
@@ -156,45 +163,41 @@ object FramedLz4Codec {
       math.max(DefaultMaxBlockBytes.toLong, 2L * configured))
   }
 
-  /** Structural sniff for Hadoop's block-LZ4 wire format, which has NO
-    * magic bytes: [origLen:int32 BE][compLen:int32 BE][chunk…]. Both
-    * lengths must be positive, origLen bounded, and compLen ≤ LZ4's
-    * worst-case expansion of origLen. Text fails this: e.g. a JSON line's
-    * first 4 bytes (`{"ty` = 0x7B227479) parse as ~2.07e9 > the ceiling —
-    * so unrecognized content falls through to pass-through, matching the
-    * reference's plain-text branch. */
-  private def looksLikeBlockLz4(in: BufferedInputStream, ceiling: Long): Boolean = {
+  /** The two big-endian int32 lengths that would open a Hadoop block-LZ4
+    * stream — [origLen][compLen][chunk…], no magic bytes — peeked from the
+    * head of `in`; None when it holds fewer than 8 bytes. */
+  private def blockHeader(in: BufferedInputStream): Option[(Long, Long)] = {
     in.mark(16)
     val hdr = in.readNBytes(8)
     in.reset()
-    if (hdr.length < 8) false
-    else {
-      def be(o: Int): Long =
-        ((hdr(o) & 0xffL) << 24) | ((hdr(o + 1) & 0xffL) << 16) |
-          ((hdr(o + 2) & 0xffL) << 8) | (hdr(o + 3) & 0xffL)
-      val orig = be(0)
-      val comp = be(4)
-      orig > 0 && orig <= ceiling &&
-        comp > 0 && comp <= orig + orig / 250 + 64 // LZ4 worst-case bound
-    }
+    def be(o: Int): Long =
+      ((hdr(o) & 0xffL) << 24) | ((hdr(o + 1) & 0xffL) << 16) |
+        ((hdr(o + 2) & 0xffL) << 8) | (hdr(o + 3) & 0xffL)
+    if (hdr.length < 8) None else Some((be(0), be(4)))
   }
+
+  /** LZ4's worst-case expansion: a chunk of `orig` bytes compresses to at
+    * most this many. */
+  private def fitsLz4Bound(orig: Long, comp: Long): Boolean =
+    comp > 0 && comp <= orig + orig / 250 + 64
+
+  /** Structural sniff for Hadoop's block-LZ4 wire format: both lengths
+    * positive, origLen bounded, and compLen ≤ LZ4's worst-case expansion
+    * of origLen. Text fails this: e.g. a JSON line's first 4 bytes
+    * (`{"ty` = 0x7B227479) parse as ~2.07e9 > the ceiling — so
+    * unrecognized content falls through to pass-through, matching the
+    * reference's plain-text branch. */
+  private def looksLikeBlockLz4(in: BufferedInputStream, ceiling: Long): Boolean =
+    blockHeader(in).exists { case (orig, comp) =>
+      orig > 0 && orig <= ceiling && fitsLz4Bound(orig, comp) }
 
   /** The pass-through branch's observability hook: true (and logged) when
     * the head of the stream is length-consistent block-LZ4 whose original
     * length merely exceeds `ceiling` — i.e. the one case where pass-through
     * is plausibly a misroute rather than genuine plain text. */
   private[replay] def warnIfPlausibleOverCeiling(
-      in: BufferedInputStream, ceiling: Long): Boolean = {
-    in.mark(16)
-    val hdr = in.readNBytes(8)
-    in.reset()
-    if (hdr.length < 8) false
-    else {
-      def be(o: Int): Long =
-        ((hdr(o) & 0xffL) << 24) | ((hdr(o + 1) & 0xffL) << 16) |
-          ((hdr(o + 2) & 0xffL) << 8) | (hdr(o + 3) & 0xffL)
-      val orig = be(0)
-      val comp = be(4)
+      in: BufferedInputStream, ceiling: Long): Boolean =
+    blockHeader(in).exists { case (orig, comp) =>
       // consistent as block-LZ4 except for the ceiling — but only within a
       // bounded band above it (a writer buffersize within 8× of the
       // reader's expectation is the plausible misconfiguration). The band
@@ -205,7 +208,7 @@ object FramedLz4Codec {
       // begins)
       val suspicious = orig > ceiling &&
         orig <= math.min(8L * ceiling, Int.MaxValue.toLong - 1) &&
-        comp > 0 && comp <= orig + orig / 250 + 64
+        fitsLz4Bound(orig, comp)
       if (suspicious)
         org.slf4j.LoggerFactory.getLogger(classOf[FramedLz4Codec]).warn(
           s"no compressor magic matched; passing stream through as plain " +
@@ -217,7 +220,6 @@ object FramedLz4Codec {
             s"dropped as malformed")
       suspicious
     }
-  }
 
   /** Hadoop config key listing extra codecs; appending this codec makes it
     * the `.lz4` handler (extension map is last-write-wins). */
@@ -239,6 +241,27 @@ object FramedLz4Codec {
   private def le32(b: Array[Byte], o: Int): Int =
     (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8) | ((b(o + 2) & 0xff) << 16) |
       ((b(o + 3) & 0xff) << 24)
+
+  /** Skips the skippable frames (magic 0x184D2A5?, a 32-bit length, then
+    * that many bytes) at the head of `in`; true when there was one. LZ4 and
+    * zstd share this frame type, and it carries no data in either. */
+  private def skipSkippableFrames(in: BufferedInputStream): Boolean = {
+    def atSkippable(): Boolean = {
+      in.mark(4)
+      val magic = in.readNBytes(4)
+      in.reset()
+      magic.length == 4 && (le32(magic, 0) & 0xfffffff0) == SkippableMagic
+    }
+    var skipped = false
+    while (atSkippable()) {
+      in.skipNBytes(4)
+      val size = in.readNBytes(4)
+      if (size.length < 4) throw new EOFException("truncated skippable frame")
+      in.skipNBytes(le32(size, 0) & 0xffffffffL)
+      skipped = true
+    }
+    skipped
+  }
 
   /** True when lz4-java reads the LZ4 frame that starts with `head` (its
     * magic, FLG and BD bytes): FLG version 01, block independence set,
@@ -268,21 +291,15 @@ object FramedLz4Codec {
     private val one = new Array[Byte](1)
 
     /** The decoder for the next frame, null at the end of the stream. */
-    @tailrec private def nextFrame(): InputStream = {
+    private def nextFrame(): InputStream = {
+      skipSkippableFrames(in)
       in.mark(FrameHeadBytes)
       val head = in.readNBytes(FrameHeadBytes)
       in.reset()
-      val magic = if (head.length >= 4) le32(head, 0) else 0
       if (head.isEmpty) null
-      else if (magic == FrameMagic) {
+      else if (head.length >= 4 && le32(head, 0) == FrameMagic) {
         if (lz4JavaReads(head)) new LZ4FrameInputStream(unclosable, true)
         else new FramedLZ4CompressorInputStream(unclosable, false)
-      } else if ((magic & 0xfffffff0) == SkippableMagic) {
-        in.skipNBytes(4)
-        val size = in.readNBytes(4)
-        if (size.length < 4) throw new EOFException("truncated skippable LZ4 frame")
-        in.skipNBytes(le32(size, 0) & 0xffffffffL)
-        nextFrame()
       } else throw new IOException("LZ4 frame stream followed by garbage")
     }
 

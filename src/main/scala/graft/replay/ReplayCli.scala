@@ -78,7 +78,7 @@ object ReplayCli {
       else if (cfg.streamArn.isEmpty)
         throw new IllegalArgumentException(s"-streamArn is required unless -dryRun\n$usage")
       else if (KinesisRecordSender.sdkPresent())
-        new KinesisRecordSender(cfg.streamArn) // reflection-bound PutRecords
+        new KinesisRecordSender(cfg.streamArn) // SDK PutRecords, bound once per sender
       else throw new IllegalStateException(
         "AWS Kinesis SDK not on the classpath — submit with " +
           "software.amazon.awssdk:kinesis on --jars, or use -dryRun")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE recipe for a timing-comparable session — shared by Bench and
   * QueryTime so the sweep number and its isolated-run arbiter cannot
@@ -91,8 +91,26 @@ private[graft] object BenchSession {
       } finally src.close()
     } catch { case scala.util.control.NonFatal(_) => Double.NaN }
 
+  /** One timed run of query `name`: (elapsed seconds, ok, stolen). A
+    * failure is logged to stderr and reported as not ok. Each run carries
+    * its own hypervisor-steal verdict — /proc/stat steal read around the
+    * timed region (r16: the benchmark host steals vCPUs for multi-second
+    * stretches); steal during a run > max(0.1 s, 15% of elapsed) marks the
+    * run as box-distorted, the DIRECT form of the canary's inference. */
+  def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
+      spark: SparkSession, sfDir: String): (Double, Boolean, Boolean) = {
+    val s0 = stealSeconds()
+    val t0 = System.nanoTime()
+    val ok = try { fn(spark, sfDir).count(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+    val el = (System.nanoTime() - t0) / 1e9
+    val st = stealSeconds() - s0
+    (el, ok, !st.isNaN && st > math.max(0.1, el * 0.15))
+  }
+
   /** Inter-query scrub: evict the shared per-app caches, then give the
-    * collector one explicit pass. Measured (r16 LitterProbe): without
+    * collector one explicit pass. Measured (r16 litter probe): without
     * the GC, garbage accumulated by earlier queries is collected DURING
     * a later query's timed region and bills it for work it didn't do
     * (x167 warm read 86-91 s in-sequence vs 1.6 s scrubbed — the same

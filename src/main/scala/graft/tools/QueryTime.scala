@@ -1,37 +1,43 @@
 package graft.tools
 
-/** Per-query timing attribution: run the named SparkEntry queries N times
-  * each in a Bench-identical session (same builder, same table + engine
-  * warm-ups, via [[BenchSession]]) and print every attempt — the
-  * isolated-run half of the dual-timing evidence the round notes cite
-  * when a sweep number and a local number disagree.
+/** Per-query timing outside the Bench sweep: runs the named SparkEntry
+  * queries in a Bench-identical session ([[BenchSession]]: same builder,
+  * same table and engine warm-ups, a scrub before each query, the same
+  * [[BenchSession.timeOnce]]) and prints, per query, every run's seconds
+  * with its steal verdict, then the block-manager storage still held after
+  * the runs — orphaned localCheckpoint blocks that survive
+  * PerAppCache.evictAll show up there before they slow a later query.
   *
-  * Usage: sbt "runMain graft.tools.QueryTime x26b_minhash_lsh [more...]"
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_RUNS (default 3).
+  * Usage: sbt "runMain graft.tools.QueryTime <sfDir> <runs> [q1,q2,...]"
+  * With no query list every registered query runs, in name order.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
+    require(args.length == 2 || args.length == 3,
+      "usage: QueryTime <sfDir> <runs> [q1,q2,...]")
+    val sfDir = args(0)
+    val runs = args(1).toInt
+    val names = args.lift(2).fold(graft.SparkEntry.queries.keys.toSeq.sorted)(
+      _.split(",").toSeq)
     val spark = BenchSession.open()
     BenchSession.warmTables(spark, sfDir)
     BenchSession.warmEngine(spark, sfDir)
-    val names = if (args.nonEmpty) args.toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
+    val sc = spark.sparkContext
     names.foreach { name =>
       graft.SparkEntry.queries.get(name) match {
-        case None => println(s"$name: not registered")
+        case None => println(s"[time] $name: not registered")
         case Some(fn) =>
-          // scrub before each query's run group (the r16 Bench
-          // discipline): run 1 is a true cold (pays its own cache
-          // builds, not predecessors' garbage), runs 2..n are warm
+          // scrub before each query's runs (the Bench discipline): run 1
+          // is a true cold that pays its own cache builds, not its
+          // predecessors' garbage; later runs are warm
           BenchSession.scrub()
           val times = (1 to runs).map { _ =>
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
+            val (t, ok, stolen) = BenchSession.timeOnce(name, fn, spark, sfDir)
+            if (!ok) "failed" else f"$t%.3f" + (if (stolen) "(stolen)" else "")
           }
-          println(s"$name: " + times.map(t => f"$t%.3f").mkString(" "))
+          val mb = sc.getRDDStorageInfo.map(_.memSize).sum / 1048576
+          println(s"[time] $name: ${times.mkString(" ")} " +
+            s"persistentRDDs=${sc.getPersistentRDDs.size} storageMB=$mb")
       }
     }
     spark.stop()

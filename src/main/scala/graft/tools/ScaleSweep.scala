@@ -204,7 +204,7 @@ object ScaleSweep {
     }
     // scrub, not bare evictAll (r16 ADVICE): eviction alone leaves the
     // evicted blocks' garbage to be collected DURING the next timed run
-    // (the LitterProbe mechanism — x167 86 s vs 1.6 s), which at higher
+    // (the r16 litter-probe mechanism — x167 86 s vs 1.6 s), which at higher
     // SF distorts exactly the ratios this tool exists to measure
     def cold(): Double = { BenchSession.scrub(); once() }
     val c = math.min(cold(), cold())

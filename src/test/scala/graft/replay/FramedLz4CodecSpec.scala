@@ -68,6 +68,17 @@ class FramedLz4CodecSpec extends AnyFunSuite {
     intercept[IOException](decode(bad))
   }
 
+  test("a zstd stream behind a leading skippable frame still decodes as zstd") {
+    val out = new ByteArrayOutputStream()
+    val z = new com.github.luben.zstd.ZstdOutputStream(out)
+    z.write(data); z.close()
+    assert(decode(Skippable ++ out.toByteArray).sameElements(data))
+  }
+
+  test("skippable frames followed by no compressed frame raise IOException") {
+    intercept[IOException](decode(Skippable ++ "plain text\n".getBytes(UTF_8)))
+  }
+
   test("a frame whose declared content size disagrees with its content raises IOException") {
     val out = new ByteArrayOutputStream()
     val f = new LZ4FrameOutputStream(out, BLOCKSIZE.SIZE_64KB, data.length + 5L,

@@ -419,6 +419,36 @@ class ReplayE2ESpec extends SparkSpec {
     assert(CollectingSender.payloads == parts.flatten.map(_ + "\n"))
   }
 
+  test("a leading skippable frame before an lz4-java frame replays every row (R2)") {
+    import FramedLz4CodecSpec._
+    // the skippable magic is zstd's too: detected as zstd, this file
+    // failed to decode and ignoreCorruptFiles dropped all its rows
+    val dir = Files.createTempDirectory("replay_lz4_skippable_java")
+    val rows = lines(0, 60)
+    Files.write(dir.resolve("trips.json.lz4"), Skippable ++ lz4Java(text(rows)))
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    CollectingSender.clear()
+    val sent = ReplayJob.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ())
+    assert(sent == 60)
+    assert(CollectingSender.payloads == rows.map(_ + "\n"))
+  }
+
+  test("leading skippable frames before a linked-block frame replay every row (R2)") {
+    import FramedLz4CodecSpec._
+    val dir = Files.createTempDirectory("replay_lz4_skippable_linked")
+    val rows = lines(0, 60)
+    Files.write(dir.resolve("trips.json.lz4"), Skippable ++ Skippable ++ linked(text(rows)))
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    CollectingSender.clear()
+    val sent = ReplayJob.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ())
+    assert(sent == 60)
+    assert(CollectingSender.payloads == rows.map(_ + "\n"))
+  }
+
   test("suffix skip matches the full path like the reference's key.endsWith — batch and streaming agree") {
     // a suffix spanning '/' (an object-key suffix, e.g. `meta/README.md`)
     // must skip in BOTH paths; a name-only match skips nothing in batch

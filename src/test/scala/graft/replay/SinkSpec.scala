@@ -152,7 +152,7 @@ class SinkSpec extends AnyFunSuite {
   test("non-retryable SDK exception fails fast as ITSELF, not a reflection wrapper") {
     // ResourceNotFound-shaped misconfiguration must surface immediately
     // (not spin 100 backoffs), and as the REAL exception — Method.invoke
-    // wraps causes in InvocationTargetException, which call() must unwrap
+    // wraps causes in InvocationTargetException, which the sender must unwrap
     // or instanceof-based handling and operator logs see reflection noise
     import graft.replay.fakesdk.services.kinesis.model.FakeKinesisClient
     import graft.replay.fakesdk.core.exception.SdkException
@@ -205,9 +205,9 @@ class SinkSpec extends AnyFunSuite {
 
   test("failedIndices reads errorCode entries duck-typed") {
     import graft.replay.fakesdk.services.kinesis.model.PutRecordsResponse
-    assert(KinesisRecordSender.failedIndices(new PutRecordsResponse(Nil, 5)) == Nil)
-    assert(KinesisRecordSender.failedIndices(
-      new PutRecordsResponse(Seq(0, 4), 5)) == Seq(0, 4))
+    val sdk = new KinesisRecordSender.Sdk("graft.replay.fakesdk")
+    assert(sdk.failedIndices(new PutRecordsResponse(Nil, 5)) == Nil)
+    assert(sdk.failedIndices(new PutRecordsResponse(Seq(0, 4), 5)) == Seq(0, 4))
   }
 
   test("reorder buffer enforces hard capacity, shedding oldest first with hysteresis") {
@@ -306,34 +306,66 @@ class SinkSpec extends AnyFunSuite {
     assert(st.lagHistogramLog2 == Seq((4L, 99L), (2048L, 1L)))
   }
 
-  test("reflective call resolves overloads exactly, not by getMethods order") {
-    import KinesisRecordSender.call
-    // exact-match pass: a Long argument must bind m(long), not m(Object),
-    // regardless of reflection enumeration order
-    assert(call(new SinkSpec.Overloaded, "m",
-      java.lang.Long.valueOf(7L)) == "long")
-    assert(call(new SinkSpec.Overloaded, "m", "s") == "string")
-    // assignable fallback still works when no exact overload exists
-    assert(call(new SinkSpec.Overloaded, "m",
-      java.lang.Integer.valueOf(3)) == "object")
-    // a primitive parameter no longer accepts an arbitrary argument
-    intercept[NoSuchMethodException](
-      call(new SinkSpec.Overloaded, "onlyLong", "not a long"))
-    // null can never fill a primitive slot
-    intercept[NoSuchMethodException](
-      call(new SinkSpec.Overloaded, "onlyLong", null))
+  test("the sender binds records(Collection) among the stub SDK's records overloads") {
+    import graft.replay.fakesdk.services.kinesis.model.PutRecordsRequest
+    // the stub declares the SDK's overloads (collection, varargs entries,
+    // varargs consumers); the binding is by exact signature, so nothing is
+    // left to resolve at send time
+    val params = classOf[PutRecordsRequest.Builder].getMethods.toSeq
+      .filter(_.getName == "records").map(_.getParameterTypes.toSeq)
+    assert(params.contains(Seq(classOf[java.util.Collection[_]])))
+    assert(params.exists(p => p.size == 1 && p.head.isArray))
+    assert(params.contains(Seq(classOf[java.util.function.Consumer[_]])))
+    val bound = new KinesisRecordSender.Sdk("graft.replay.fakesdk").requestRecords
+    assert(bound.getDeclaringClass == classOf[PutRecordsRequest.Builder])
+    assert(bound.getParameterTypes.toSeq == Seq(classOf[java.util.Collection[_]]))
   }
 
-  test("reflective call invokes through public supertypes of package-private impls") {
-    import KinesisRecordSender.call
-    // Collections.unmodifiableList returns a package-private class; a
-    // Method reflected off it throws IllegalAccessException on invoke
-    // unless re-homed onto the public List interface — the exact shape of
-    // the AWS SDK's BuilderImpl / DefaultKinesisClient classes, so this
-    // guards the production activation path the stub SDK cannot
+  test("a Method bound on a public interface invokes on a JDK package-private impl") {
+    import KinesisRecordSender.invoke
+    // Collections.unmodifiableList returns a package-private class, the
+    // shape of the AWS SDK's BuilderImpl / DefaultKinesisClient: a Method
+    // taken from the public List interface invokes on it, and what the
+    // target throws surfaces unwrapped
     val l = java.util.Collections.unmodifiableList(new java.util.ArrayList[AnyRef]())
-    assert(call(l, "size").asInstanceOf[Integer] == 0)
-    assert(call(l, "isEmpty") == java.lang.Boolean.TRUE)
+    assert(!java.lang.reflect.Modifier.isPublic(l.getClass.getModifiers))
+    val list = classOf[java.util.List[_]]
+    assert(invoke(list.getMethod("size"), l).asInstanceOf[Integer] == 0)
+    assert(invoke(list.getMethod("isEmpty"), l) == java.lang.Boolean.TRUE)
+    intercept[UnsupportedOperationException](
+      invoke(list.getMethod("add", classOf[Object]), l, "x"))
+  }
+
+  test("the bound SDK table is resolved once per sender, not per request or record") {
+    import graft.replay.fakesdk.services.kinesis.model.FakeKinesisClient
+    val client = new FakeKinesisClient(Nil)
+    val sender = new KinesisRecordSender(TestArn,
+      sdkRoot = "graft.replay.fakesdk", clientFactory = Some(() => client))
+    val before = KinesisRecordSender.bindings.get()
+    val (sent, _) = Sink.sendAll(
+      (0 until 1500).iterator.map(i => bytes(s"r$i")), sender, _ => ())
+    assert(sent == 1500)
+    assert(client.batches.map(_.size).toSeq == Seq(500, 500, 500))
+    assert(KinesisRecordSender.bindings.get() - before == 1)
+  }
+
+  test("the default client is KinesisClient.builder().region(<ARN region>).build(), one per region") {
+    import graft.replay.fakesdk.services.kinesis.KinesisClient
+    def clients(region: String) = KinesisClient.built.synchronized(
+      KinesisClient.built.filter(_._1 == region).map(_._2).toSeq)
+    val euArn = "arn:aws:kinesis:eu-north-1:123456789012:stream/default-chain"
+    val usArn = "arn:aws:kinesis:us-east-2:123456789012:stream/default-chain"
+    val senders = Seq(euArn, euArn, usArn).map(arn =>
+      new KinesisRecordSender(arn, sdkRoot = "graft.replay.fakesdk"))
+    senders.zipWithIndex.foreach { case (s, i) =>
+      assert(Sink.sendAll(Iterator(bytes(s"d$i")), s, _ => ())._1 == 1) }
+    // the two eu-north-1 senders share one JVM-wide client
+    val eu = clients("eu-north-1")
+    assert(eu.size == 1)
+    assert(eu.head.batches.toSeq == Seq(Seq("d0"), Seq("d1")))
+    assert(eu.head.arns.toSeq == Seq(euArn, euArn))
+    val us = clients("us-east-2")
+    assert(us.size == 1 && us.head.batches.toSeq == Seq(Seq("d2")))
   }
 
   test("affine schedule arithmetic (R6): deltas divided by speedup, round-half-up") {
@@ -346,15 +378,5 @@ class SinkSpec extends AnyFunSuite {
     // fractional speedups are legal (reference takes a float)
     assert(Schedule.ingestionMs(1001, 1000, 0, 0.5) == 2)
     assert(Schedule.ingestionMs(1003, 1000, 0, 2.5) == 1)
-  }
-}
-
-object SinkSpec {
-  /** Overload fixture for the reflective-call resolution test. */
-  final class Overloaded {
-    def m(x: Long): String = "long"
-    def m(x: String): String = "string"
-    def m(x: AnyRef): String = "object"
-    def onlyLong(x: Long): String = "onlyLong"
   }
 }
