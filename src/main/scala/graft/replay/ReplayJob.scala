@@ -1,10 +1,18 @@
 package graft.replay
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.RangePartitioner
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
-/** The whole replay pipeline, wired like RePlayer.main (SURVEY.md §3.1) but
-  * as one declarative plan + a paced sink:
+/** The whole replay pipeline, wired like RePlayer.main (SURVEY.md §3.1):
+  * a declarative source → parse → seek plan feeding a paced sink:
   *
   *   source (R1–R4) → parse (R5–R6) → seek (R7) → order (R8)
   *     → schedule (R6/R9) → paced batched sink (R9–R11) → stats (R12)
@@ -27,26 +35,38 @@ object ReplayJob {
     Parse.seek(Parse.parsed(lines, cfg.timestampAttributeName), cfg.seek)
   }
 
-  /** Scheduled events, unordered (ordering is applied by the consumer —
-    * one sort, chosen to match its partitioning). `events` lets run() pass
-    * the same relation persisted. */
-  private[replay] def scheduled(cfg: ReplayConfig, events: DataFrame): DataFrame = {
-    val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
-    Schedule.withIngestionTime(events, cfg.speedupFactor, startMs)
-  }
-
-  private[replay] def scheduled(spark: SparkSession, cfg: ReplayConfig): DataFrame =
-    scheduled(cfg, parsedEvents(spark, cfg))
-
   /** The declarative part: everything up to the sink, as one DataFrame. */
-  def plan(spark: SparkSession, cfg: ReplayConfig): DataFrame =
-    scheduled(spark, cfg)
+  def plan(spark: SparkSession, cfg: ReplayConfig): DataFrame = {
+    val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
+    Schedule.withIngestionTime(parsedEvents(spark, cfg), cfg.speedupFactor, startMs)
       .orderBy(col("timestamp")) // R8: total sort ≥ the reference's bounded reorder
+  }
 
   /** Run the replay: pace each event to its simulated ingestion time and
     * push through the sender in requests of ≤500 records and ≤5 MiB.
     * Sender parallelism = sink partitions (reference: 4 sender threads,
     * RePlayer.java:28).
+    *
+    * A pass is three Spark jobs:
+    *   1. scan, decode, parse and seek (codegen'd SQL), kept as
+    *      `(event ms, payload bytes)` rows persisted `MEMORY_AND_DISK`,
+    *      folded to the schedule anchor (min event time) and the row count;
+    *   2. the range partitioner's sample of event times, over the cache
+    *      (none with one sender; a second sample job re-samples an input
+    *      partition holding far more rows than the others);
+    *   3. the range shuffle on event ms, sorted within each partition, and
+    *      the paced sink (one job, two stages). The shuffle is what
+    *      `repartitionAndSortWithinPartitions` builds, but its records go
+    *      through [[RecordShuffleSerializer]], not Kryo.
+    * The cache is what keeps the whole input from being listed, decoded
+    * and parsed once per job; it is dropped when the pass ends, also on
+    * failure.
+    *
+    * Event-time order is the schedule order: `Schedule.ingestionMs` is
+    * non-decreasing in event time, so sorting on event ms alone yields
+    * the `(ingestion_ms, event ms)` order, and each sink task computes its
+    * records' due times as they arrive. Each task replays a contiguous
+    * slice of event time, in event-time order.
     *
     * Pacing sleeps inside sink tasks; with senderParallelism ≪ cores this
     * holds few cores, and at high speedup the sleeps vanish — the
@@ -55,46 +75,82 @@ object ReplayJob {
   def run(spark: SparkSession, cfg: ReplayConfig, sender: RecordSender,
       nowMs: () => Long = () => System.currentTimeMillis(),
       sleeper: Long => Unit = Thread.sleep): Long = {
-    // the schedule anchor (min event time) is its own aggregation over the
-    // same source: without a persist the whole input would be listed,
-    // decompressed, and parsed TWICE — the dominant cost on a multi-GB
-    // non-splittable .lz4 dataset. Cache the parsed relation for the run.
-    val events = parsedEvents(spark, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
+    val rows = parsedEvents(spark, cfg)
+      .select(unix_millis(col("timestamp")), col("payload"))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString.getBytes(UTF_8)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val df = scheduled(cfg, events)
-      val sentAcc = spark.sparkContext.longAccumulator("records_sent")
-      val retryAcc = spark.sparkContext.longAccumulator("send_retries")
-      // executor JVMs never see the driver's configureShared call — ship
-      // the frequency in the closure so per-executor stats lines emit on a
-      // real cluster too (no-op in local mode, where shared is configured)
-      val statsFreq = cfg.statisticsFrequencyMillis
-      df.select(col("payload"), col("ingestion_ms"),
-          unix_millis(col("timestamp")).as("ts_ms"))
-        // range-partition by schedule so each sink task replays a
-        // contiguous slice of simulated time (order preserved within
-        // partition); ts_ms tie-breaks inside one scheduled millisecond —
-        // at speedup 6480 one ingestion_ms covers 6.48 s of event time,
-        // and schedule-only sorting would leave that span unordered
-        .repartitionByRange(cfg.senderParallelism, col("ingestion_ms"))
-        .sortWithinPartitions(col("ingestion_ms"), col("ts_ms"))
-        .foreachPartition { (it: Iterator[Row]) =>
-          ReplayStats.ensureConfigured(statsFreq)
-          // high-water of the record the pacer just admitted: the iterator
-          // is pulled (setting lastTsMs) before onPaced fires for it
-          var lastTsMs = 0L
-          val scheduledRecords = it.map { r =>
-            lastTsMs = r.getLong(2)
-            (r.getLong(1),
-              r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val (firstMs, events) = rows.aggregate((Long.MaxValue, 0L))(
+        (acc, r) => (math.min(acc._1, r._1), acc._2 + 1),
+        (a, b) => (math.min(a._1, b._1), a._2 + b._2))
+      if (events == 0) 0L else {
+        val sentAcc = spark.sparkContext.longAccumulator("records_sent")
+        val retryAcc = spark.sparkContext.longAccumulator("send_retries")
+        // executor JVMs never see the driver's configureShared call — ship
+        // the frequency in the closure so per-executor stats lines emit on a
+        // real cluster too (no-op in local mode, where shared is configured)
+        val statsFreq = cfg.statisticsFrequencyMillis
+        val speedup = cfg.speedupFactor
+        new ShuffledRDD[Long, Array[Byte], Array[Byte]](rows,
+            new RangePartitioner(cfg.senderParallelism, rows))
+          .setKeyOrdering(Ordering.Long)
+          .setSerializer(RecordShuffleSerializer)
+          .foreachPartition { it =>
+            ReplayStats.ensureConfigured(statsFreq)
+            // high-water of the record the pacer just admitted: the iterator
+            // is pulled (setting lastTsMs) before onPaced fires for it
+            var lastTsMs = 0L
+            val scheduledRecords = it.map { case (tsMs, payload) =>
+              lastTsMs = tsMs
+              (Schedule.ingestionMs(tsMs, firstMs, startMs, speedup), payload)
+            }
+            val (sent, retries) = Sink.sendScheduled(scheduledRecords, sender,
+              nowMs, sleeper,
+              onPaced = lag => ReplayStats.shared.record(lag, lastTsMs)) // R12
+            sentAcc.add(sent)
+            retryAcc.add(retries)
           }
-          val (sent, retries) = Sink.sendScheduled(scheduledRecords, sender,
-            nowMs, sleeper,
-            onPaced = lag => ReplayStats.shared.record(lag, lastTsMs)) // R12
-          sentAcc.add(sent)
-          retryAcc.add(retries)
+        sentAcc.value
+      }
+    } finally rows.unpersist()
+  }
+}
+
+/** Shuffle encoding of one replay record: the event ms, then the payload's
+  * length and bytes. Kryo, which Spark picks for these types, tags every
+  * object with its class and tracks every byte array by reference. */
+private[replay] object RecordShuffleSerializer extends Serializer with Serializable {
+  override def newInstance(): SerializerInstance = new SerializerInstance {
+    private def streamOnly = throw new UnsupportedOperationException("stream-only serializer")
+    override def serialize[T: ClassTag](t: T): ByteBuffer = streamOnly
+    override def deserialize[T: ClassTag](bytes: ByteBuffer): T = streamOnly
+    override def deserialize[T: ClassTag](bytes: ByteBuffer, loader: ClassLoader): T = streamOnly
+
+    override def serializeStream(s: OutputStream): SerializationStream = new SerializationStream {
+      private val out = new DataOutputStream(s)
+      override def writeObject[T: ClassTag](t: T): SerializationStream = {
+        t match {
+          case ms: java.lang.Long => out.writeLong(ms)
+          case payload: Array[Byte] => out.writeInt(payload.length); out.write(payload)
         }
-      sentAcc.value
-    } finally events.unpersist()
+        this
+      }
+      override def flush(): Unit = out.flush()
+      override def close(): Unit = out.close()
+    }
+
+    override def deserializeStream(s: InputStream): DeserializationStream = new DeserializationStream {
+      private val in = new DataInputStream(s)
+      override def readObject[T: ClassTag](): T = streamOnly
+      override def readKey[T: ClassTag](): T = in.readLong().asInstanceOf[T]
+      override def readValue[T: ClassTag](): T = {
+        val payload = new Array[Byte](in.readInt())
+        in.readFully(payload)
+        payload.asInstanceOf[T]
+      }
+      override def close(): Unit = in.close()
+    }
   }
 }

@@ -85,6 +85,39 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("DataFrame schedule equals the per-record schedule row by row") {
+    import org.apache.spark.sql.functions.{col, timestamp_millis}
+    import spark.implicits._
+    val speedups = Gen.oneOf(Gen.oneOf(1.0, 6480.0, 0.5, 2.5, 1000.3),
+      Gen.choose(1L, 100000L).map(_.toDouble))
+    // a Spark timestamp holds |ms| ≤ Long.MaxValue / 1000, so no pair of
+    // rows is more than 2 · that apart — far inside the exact-integer
+    // bound (Long.MaxValue / 4) past which both forms take the double
+    // path; the widest deltas a timestamp carries are covered instead
+    val widestDeltaMs = 2 * (Long.MaxValue / 1000)
+    assert(widestDeltaMs < Long.MaxValue / 4)
+    val gen = for {
+      speedup <- speedups
+      first <- Gen.choose(-(1L << 40), 1L << 40)
+      // a half-way delta sits exactly between two scheduled milliseconds
+      // (Δ/s = k + ½, reachable for even integral speedups)
+      deltas <- Gen.listOfN(24, Gen.oneOf(
+        Gen.choose(0L, 1L << 30),
+        Gen.choose(0L, 1L << 20).map(k => (k * speedup + speedup / 2).toLong),
+        Gen.choose(1L << 49, 1L << 51)))
+      start <- Gen.choose(0L, 1L << 40)
+    } yield (speedup, first, deltas, start)
+    check(forAll(gen) { case (speedup, first, deltas, start) =>
+      val ms = first +: deltas.map(first + _)
+      val df = ms.toDF("ms").select(col("ms"), timestamp_millis(col("ms")).as("timestamp"))
+      val got = Schedule.withIngestionTime(df, speedup, start)
+        .select("ms", "ingestion_ms").as[(Long, Long)].collect().toSeq
+      got.size == ms.size && got.forall { case (m, due) =>
+        due == Schedule.ingestionMs(m, first, start, speedup)
+      }
+    }, n = 30)
+  }
+
   test("sendAll delivers every record exactly once under arbitrary partial failures") {
     val gen = for {
       n <- Gen.choose(0, 1300)

@@ -21,6 +21,38 @@ object SleepRecorder {
   }
 }
 
+/** Collects like [[CollectingSender]] and notes, at every send, whether the
+  * SQL cache manager holds a relation (local mode: sink tasks run in the
+  * driver's JVM, next to its session). */
+class CacheProbeSender extends CollectingSender {
+  override def send(records: Seq[Array[Byte]]): Seq[Int] = {
+    CacheProbeSender.sqlCacheEmpty.add(SparkSpec.session.sharedState.cacheManager.isEmpty)
+    super.send(records)
+  }
+}
+object CacheProbeSender {
+  val sqlCacheEmpty = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Boolean]()
+}
+
+/** Records each payload with the sink partition that sent it, in send
+  * order (one task per partition, so a partition's order is its task's). */
+class LaneRecordingSender extends RecordSender {
+  override def send(records: Seq[Array[Byte]]): Seq[Int] = {
+    val lane = org.apache.spark.TaskContext.get().partitionId()
+    records.foreach(r => LaneRecordingSender.received.add((lane, new String(r, UTF_8))))
+    Nil
+  }
+}
+object LaneRecordingSender {
+  val received = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+}
+
+/** Fails every send the way a misconfigured transport does: by throwing. */
+class ThrowingSender extends RecordSender {
+  override def send(records: Seq[Array[Byte]]): Seq[Int] =
+    throw new IllegalStateException("stream not found: replay-test")
+}
+
 class ReplayE2ESpec extends SparkSpec {
 
   private def writeFixture(): String = {
@@ -76,6 +108,155 @@ class ReplayE2ESpec extends SparkSpec {
       nowMs = () => Long.MaxValue, sleeper = _ => ())
     assert(sent == 4)
     assert(ids(CollectingSender.payloads) == Seq(3, 4, 5, 6))
+  }
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * submitted. Jobs are counted by a job group set on this thread, so
+    * jobs from other threads never count. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"replay-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group-done" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result = try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of `body` has been counted
+      sc.setJobGroup(s"$group-done", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (result, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `files` JSON-lines files of seeded events over `distinctTimes` event
+    * times (minutes 0.. of 2024-01-01), plus one malformed line per file.
+    * Returns the directory and every good line with its forced '\n'. */
+  private def laneFixture(files: Int, perFile: Int, distinctTimes: Int,
+      seed: Long): (String, Seq[String]) = {
+    val dir = Files.createTempDirectory("replay_lanes")
+    val rng = new scala.util.Random(seed)
+    val good = (0 until files).map { k =>
+      val lines = (0 until perFile).map { l =>
+        val minute = rng.nextInt(distinctTimes)
+        f"""{"id":${k * 1000 + l},"dropoff_datetime":"2024-01-01T00:$minute%02d:00Z"}"""
+      }
+      Files.write(dir.resolve(f"part-$k%02d.jsonl"),
+        (lines :+ "not json").mkString("\n").getBytes(UTF_8))
+      lines
+    }
+    (dir.toString, good.flatten.map(_ + "\n"))
+  }
+
+  private def eventMs(payload: String): Long = java.time.Instant.parse(
+    """"dropoff_datetime":"([^"]+)"""".r.findFirstMatchIn(payload).get.group(1)).toEpochMilli
+
+  test("batch replay is at most 3 Spark jobs and leaves no cache behind") {
+    val sc = spark.sparkContext
+    val (dir, expected) = laneFixture(files = 6, perFile = 50, distinctTimes = 40, seed = 11)
+    val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 4)
+    CollectingSender.clear()
+    CacheProbeSender.sqlCacheEmpty.clear()
+    val (sent, jobs) = withJobCount(onePartitionPerFile(
+      ReplayJob.run(spark, cfg, new CacheProbeSender(),
+        nowMs = () => Long.MaxValue, sleeper = _ => ())))
+    assert(sent == expected.size)
+    assert(CollectingSender.payloads.sorted == expected.sorted)
+    // scan+parse+anchor, range sample, shuffle+sink
+    assert(jobs <= 3, s"$jobs Spark jobs for one replay pass")
+    assert(sc.getPersistentRDDs.isEmpty, s"left persisted: ${sc.getPersistentRDDs}")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // no DataFrame cache while the sink runs either
+    val probes = CacheProbeSender.sqlCacheEmpty.toArray(Array.empty[java.lang.Boolean]).toSeq
+    assert(probes.nonEmpty && probes.forall(_.booleanValue), s"SQL cache empty at send: $probes")
+  }
+
+  test("the replay shuffle encoding round-trips event ms and payloads, then ends") {
+    val records = Seq(
+      (Long.MinValue, Array.empty[Byte]),
+      (-1L, "{\"a\":1}\n".getBytes(UTF_8)),
+      (1704067200000L, Array.tabulate[Byte](Sink.MaxRecordBytes)(i => (i % 251).toByte)),
+      (Long.MaxValue, Array[Byte](0, -1, 10)))
+    val ser = RecordShuffleSerializer.newInstance()
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = ser.serializeStream(buf)
+    records.foreach { case (ms, payload) => out.writeKey(ms); out.writeValue(payload) }
+    out.close()
+    val back = ser.deserializeStream(new java.io.ByteArrayInputStream(buf.toByteArray))
+      .asKeyValueIterator.toSeq
+      .map { case (ms, payload) => (ms.asInstanceOf[Long], payload.asInstanceOf[Array[Byte]].toSeq) }
+    assert(back == records.map { case (ms, payload) => (ms, payload.toSeq) })
+  }
+
+  test("batch replay of no events returns 0, sends nothing and persists nothing") {
+    val sc = spark.sparkContext
+    val malformed = Files.createTempDirectory("replay_all_malformed")
+    Files.write(malformed.resolve("part-a.jsonl"), Seq(
+      """not json at all""",
+      """{"id":1,"no_ts_here":true}""",
+      """{"id":2,"dropoff_datetime":"not a time"}""").mkString("\n").getBytes(UTF_8))
+    Files.write(malformed.resolve("part-b.jsonl"), "{".getBytes(UTF_8))
+    val allMalformed = ReplayConfig(inputPath = malformed.toString,
+      speedupFactor = 60000L, ingestionStartMs = Some(0L), senderParallelism = 4)
+    // every fixture event falls before the seek point
+    val allBeforeSeek = ReplayConfig(inputPath = writeFixture(),
+      speedupFactor = 60000L, ingestionStartMs = Some(0L), senderParallelism = 4,
+      seek = Some(java.time.Instant.parse("2025-01-01T00:00:00Z")))
+    for (cfg <- Seq(allMalformed, allBeforeSeek)) {
+      CollectingSender.clear()
+      val (sent, jobs) = withJobCount(ReplayJob.run(spark, cfg, new CollectingSender(),
+        nowMs = () => Long.MaxValue, sleeper = _ => ()))
+      assert(sent == 0 && CollectingSender.payloads.isEmpty, cfg.inputPath)
+      assert(jobs <= 1, s"$jobs jobs: nothing to partition after the anchor fold")
+      assert(sc.getPersistentRDDs.isEmpty, s"left persisted: ${sc.getPersistentRDDs}")
+    }
+  }
+
+  test("batch replay rethrows a non-retryable send failure and persists nothing") {
+    val cfg = ReplayConfig(inputPath = writeFixture(), speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 2)
+    val e = intercept[Exception](ReplayJob.run(spark, cfg, new ThrowingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ()))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => Option(c.getMessage).exists(_.contains("stream not found: replay-test"))),
+      s"sender failure lost: $e")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"left persisted: ${spark.sparkContext.getPersistentRDDs}")
+  }
+
+  test("batch replay over 3 lanes delivers every good line once, each lane in event-time order") {
+    // 8 distinct event times over 600 events: every range boundary falls
+    // on a run of equal event times
+    val (dir, expected) = laneFixture(files = 5, perFile = 120, distinctTimes = 8, seed = 23)
+    val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 3)
+    LaneRecordingSender.received.clear()
+    val sent = onePartitionPerFile(ReplayJob.run(spark, cfg, new LaneRecordingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ()))
+    val got = LaneRecordingSender.received.toArray(Array.empty[(Int, String)]).toSeq
+    assert(sent == expected.size)
+    assert(got.map(_._2).sorted == expected.sorted) // each good line exactly once
+    val lanes = got.groupBy(_._1).map { case (lane, rs) => (lane, rs.map(r => eventMs(r._2))) }
+    assert(lanes.size > 1, s"one lane only: ${lanes.keys}")
+    lanes.foreach { case (lane, ms) =>
+      assert(ms == ms.sorted, s"lane $lane out of event-time order")
+    }
+    // lanes are contiguous, disjoint slices of event time: equal event
+    // times never straddle two lanes
+    val spans = lanes.toSeq.sortBy(_._1).map { case (_, ms) => (ms.head, ms.last) }
+    spans.zip(spans.drop(1)).foreach { case ((_, hi), (lo, _)) => assert(hi < lo, s"$spans") }
   }
 
   test("streaming replay with AvailableNow drains everything then stops (R14)") {
