@@ -1,5 +1,7 @@
 package graft.replay
 
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -58,4 +60,14 @@ object Parse {
   def seek(df: DataFrame, seekTo: Option[java.time.Instant]): DataFrame =
     seekTo.fold(df)(i =>
       df.filter(col("timestamp") >= lit(java.sql.Timestamp.from(i))))
+
+  /** The replay record, the one format both replay paths send:
+    * `(event ms, payload bytes)` per row of a [[parsed]] relation. The
+    * payload is encoded as UTF-8 from its Java string, so an invalid
+    * UTF-8 sequence in the input is sent as U+FFFD (EF BF BD), as the
+    * reference does through Java strings. */
+  def records(events: DataFrame): RDD[(Long, Array[Byte])] =
+    events.select(unix_millis(col("timestamp")), col("payload"))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString.getBytes(UTF_8)))
 }

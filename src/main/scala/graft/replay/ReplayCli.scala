@@ -40,8 +40,9 @@ object ReplayCli {
           cfg = cfg.copy(statisticsFrequencyMillis = next().toLong)
         case "-readerBufferSize" | "--readerBufferSize" =>
           cfg = cfg.copy(readerBufferSize = next().toInt)
-        case "-kinesisProducerBuffer" | "--kinesisProducerBuffer" =>
-          cfg = cfg.copy(producerBufferSize = next().toInt)
+        // accepted for parity (RePlayer.java:27) and ignored: there is no
+        // producer queue to size, batched sends and trigger limits bound it
+        case "-kinesisProducerBuffer" | "--kinesisProducerBuffer" => next().toInt
         case "-kinesisSenderThreads" | "--kinesisSenderThreads" =>
           cfg = cfg.copy(senderParallelism = next().toInt)
         case "-objectSuffixToSkip" | "--objectSuffixToSkip" =>

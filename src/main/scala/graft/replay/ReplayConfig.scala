@@ -19,10 +19,6 @@ final case class ReplayConfig(
     // reference's 100k bounded queue); the batch path has no in-process
     // buffer (total sort) so it ignores this.
     readerBufferSize: Int = 100000,
-    // Accepted for CLI parity (RePlayer.java:27) but intentionally NOT
-    // consumed: the producer queue's backpressure is done by trigger
-    // limits + batched sends — there is no producer-side buffer to size.
-    producerBufferSize: Int = 5000,
     senderParallelism: Int = 4, // RePlayer.java:28 — sink partition count
     objectSuffixToSkip: String = "README.md", // JsonEventS3Iterator.java:71-73
     ingestionStartMs: Option[Long] = None // pin for deterministic tests; None = wall clock

@@ -2,12 +2,10 @@ package graft.replay
 
 import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.RangePartitioner
 import org.apache.spark.rdd.ShuffledRDD
 import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
 
@@ -28,20 +26,6 @@ import scala.reflect.ClassTag
   */
 object ReplayJob {
 
-  /** source → parse → seek: the events relation both entry points build on
-    * (one definition, so plan() and run() cannot drift apart). */
-  private[replay] def parsedEvents(spark: SparkSession, cfg: ReplayConfig): DataFrame = {
-    val lines = Source.jsonLines(spark, cfg)
-    Parse.seek(Parse.parsed(lines, cfg.timestampAttributeName), cfg.seek)
-  }
-
-  /** The declarative part: everything up to the sink, as one DataFrame. */
-  def plan(spark: SparkSession, cfg: ReplayConfig): DataFrame = {
-    val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
-    Schedule.withIngestionTime(parsedEvents(spark, cfg), cfg.speedupFactor, startMs)
-      .orderBy(col("timestamp")) // R8: total sort ≥ the reference's bounded reorder
-  }
-
   /** Run the replay: pace each event to its simulated ingestion time and
     * push through the sender in requests of ≤500 records and ≤5 MiB.
     * Sender parallelism = sink partitions (reference: 4 sender threads,
@@ -49,8 +33,9 @@ object ReplayJob {
     *
     * A pass is three Spark jobs:
     *   1. scan, decode, parse and seek (codegen'd SQL), kept as
-    *      `(event ms, payload bytes)` rows persisted `MEMORY_AND_DISK`,
-    *      folded to the schedule anchor (min event time) and the row count;
+    *      [[Parse.records]] rows, `(event ms, payload bytes)`, persisted
+    *      `MEMORY_AND_DISK` and folded to the schedule anchor (min event
+    *      time) and the row count;
     *   2. the range partitioner's sample of event times, over the cache
     *      (none with one sender; a second sample job re-samples an input
     *      partition holding far more rows than the others);
@@ -64,9 +49,10 @@ object ReplayJob {
     *
     * Event-time order is the schedule order: `Schedule.ingestionMs` is
     * non-decreasing in event time, so sorting on event ms alone yields
-    * the `(ingestion_ms, event ms)` order, and each sink task computes its
-    * records' due times as they arrive. Each task replays a contiguous
-    * slice of event time, in event-time order.
+    * the `(ingestion_ms, event ms)` order. Each sink task is one
+    * [[Sink.replay]], which computes its records' due times as they
+    * arrive, as the streaming path's tasks do. Each task replays a
+    * contiguous slice of event time, in event-time order.
     *
     * Pacing sleeps inside sink tasks; with senderParallelism ≪ cores this
     * holds few cores, and at high speedup the sleeps vanish — the
@@ -76,21 +62,16 @@ object ReplayJob {
       nowMs: () => Long = () => System.currentTimeMillis(),
       sleeper: Long => Unit = Thread.sleep): Long = {
     val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
-    val rows = parsedEvents(spark, cfg)
-      .select(unix_millis(col("timestamp")), col("payload"))
-      .queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getUTF8String(1).toString.getBytes(UTF_8)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val events = Parse.seek(
+      Parse.parsed(Source.jsonLines(spark, cfg), cfg.timestampAttributeName), cfg.seek)
+    val rows = Parse.records(events).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val (firstMs, events) = rows.aggregate((Long.MaxValue, 0L))(
+      val (firstMs, count) = rows.aggregate((Long.MaxValue, 0L))(
         (acc, r) => (math.min(acc._1, r._1), acc._2 + 1),
         (a, b) => (math.min(a._1, b._1), a._2 + b._2))
-      if (events == 0) 0L else {
+      if (count == 0) 0L else {
         val sentAcc = spark.sparkContext.longAccumulator("records_sent")
         val retryAcc = spark.sparkContext.longAccumulator("send_retries")
-        // executor JVMs never see the driver's configureShared call — ship
-        // the frequency in the closure so per-executor stats lines emit on a
-        // real cluster too (no-op in local mode, where shared is configured)
         val statsFreq = cfg.statisticsFrequencyMillis
         val speedup = cfg.speedupFactor
         new ShuffledRDD[Long, Array[Byte], Array[Byte]](rows,
@@ -98,17 +79,8 @@ object ReplayJob {
           .setKeyOrdering(Ordering.Long)
           .setSerializer(RecordShuffleSerializer)
           .foreachPartition { it =>
-            ReplayStats.ensureConfigured(statsFreq)
-            // high-water of the record the pacer just admitted: the iterator
-            // is pulled (setting lastTsMs) before onPaced fires for it
-            var lastTsMs = 0L
-            val scheduledRecords = it.map { case (tsMs, payload) =>
-              lastTsMs = tsMs
-              (Schedule.ingestionMs(tsMs, firstMs, startMs, speedup), payload)
-            }
-            val (sent, retries) = Sink.sendScheduled(scheduledRecords, sender,
-              nowMs, sleeper,
-              onPaced = lag => ReplayStats.shared.record(lag, lastTsMs)) // R12
+            val (sent, retries) = Sink.replay(it, firstMs, startMs, speedup, statsFreq,
+              sender, nowMs, sleeper)
             sentAcc.add(sent)
             retryAcc.add(retries)
           }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * We therefore take `speedupFactor: Double` and round half-up. For the
   * common integral-speedup case the division is done in exact integer
   * space — `floor((2Δ + s) / 2s)` is identical to `Math.round(Δ/s)` in
-  * exact arithmetic — so the DataFrame path, the per-record path, and the
-  * DuckDB oracle agree bit-for-bit with no libm in the loop.
+  * exact arithmetic — with no libm in the loop. [[ingestionMs]] is the one
+  * place this rule lives: both replay paths call it per record in their
+  * sink task ([[Sink.replay]]), and [[withIngestionTime]] calls it as a UDF.
   *
   * The reference anchors `firstEventTime` statefully on the first parsed
   * event (JsonEvent.java:91-93); declaratively that anchor is `min(ts)`,
@@ -35,32 +36,21 @@ object Schedule {
     * exact to well under 1 ms at that magnitude. */
   private[replay] val MaxExactDeltaMs: Long = Long.MaxValue / 4
 
-  /** Adds `ingestion_time` (timestamp) + `ingestion_ms` (epoch millis). */
+  /** Adds `ingestion_time` (timestamp) + `ingestion_ms` (epoch millis),
+    * anchored at the relation's earliest event. */
   def withIngestionTime(events: DataFrame, speedupFactor: Double,
       ingestionStartMs: Long): DataFrame = {
     val anchor = events.agg(min(unix_millis(col("timestamp"))).as("first_ms"))
-    val withDelta = events
+    val due = udf((eventMs: Long, firstMs: Long) =>
+      ingestionMs(eventMs, firstMs, ingestionStartMs, speedupFactor))
+    events
       .crossJoin(broadcast(anchor))
-      .withColumn("delta_ms", unix_millis(col("timestamp")) - col("first_ms"))
-    val scaled = integralSpeedup(speedupFactor) match {
-      // delta_ms ≥ 0 (min-anchor), so `div` truncation == floor here; the
-      // abs guard keeps `2*delta_ms` from overflowing (ANSI would throw) on
-      // pathological event-time deltas — those take the double path instead
-      case Some(s) =>
-        when(abs(col("delta_ms")) <= lit(MaxExactDeltaMs),
-          expr(s"(2 * delta_ms + $s) div ${2 * s}"))
-          .otherwise(round(col("delta_ms") / lit(speedupFactor.toDouble), 0).cast("long"))
-      case None =>
-        round(col("delta_ms") / lit(speedupFactor), 0).cast("long")
-    }
-    withDelta
-      .withColumn("ingestion_ms", lit(ingestionStartMs) + scaled)
+      .withColumn("ingestion_ms", due(unix_millis(col("timestamp")), col("first_ms")))
       .withColumn("ingestion_time", timestamp_millis(col("ingestion_ms")))
-      .drop("first_ms", "delta_ms")
+      .drop("first_ms")
   }
 
-  /** Pure form used by tests and per-record paths. Same rounding as the
-    * DataFrame path: exact integer half-up for integral speedups,
+  /** An event's due time: exact integer half-up for integral speedups,
     * `Math.round` (the reference's operator) otherwise. */
   def ingestionMs(eventMs: Long, firstEventMs: Long, ingestionStartMs: Long,
       speedupFactor: Double): Long = {

@@ -12,9 +12,9 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicInteger}
   * exponential backoff `min(2000 ms, 2^attempt·100 ms)` up to 100 attempts
   * (KinesisProducer.java:26-28,139-169,187-195).
   *
-  * Spark-first: sender threads become sink-stage partitions
-  * (`repartition(senderParallelism)` → N concurrent tasks); the bounded
-  * queue's backpressure becomes trigger limits. The transport is abstracted
+  * Spark-first: sender threads become `senderParallelism` sink tasks,
+  * each one [[Sink.replay]] on both replay paths; the bounded queue's
+  * backpressure becomes trigger limits. The transport is abstracted
   * behind [[RecordSender]] because the AWS SDK is not on the offline
   * classpath — a Kinesis implementation is a thin `putRecords` adapter with
   * exactly this retry contract; tests inject [[CollectingSender]].
@@ -143,15 +143,9 @@ object Sink {
     * ≤5 MiB with the reference's retry protocol. Returns (records sent,
     * retries performed). */
   def sendAll(records: Iterator[Array[Byte]], sender: RecordSender,
-      sleeper: Long => Unit = Thread.sleep): (Long, Long) = {
-    val request = new Request(sender, sleeper)
-    records.foreach { payload =>
-      requireSendable(payload)
-      request.add(payload)
-    }
-    request.flush()
-    (request.sent, request.retries)
-  }
+      sleeper: Long => Unit = Thread.sleep): (Long, Long) =
+    // every record due at 0 against a clock fixed at 0: none ever waits
+    sendScheduled(records.map(p => (0L, p)), sender, () => 0L, sleeper)
 
   /** R9+R10 — paced, batched drain: each record is paced to its simulated
     * due time, and the pending batch is FLUSHED BEFORE any pacing sleep —
@@ -183,6 +177,28 @@ object Sink {
     }
     request.flush()
     (request.sent, request.retries)
+  }
+
+  /** One sink task of either replay path (R9–R12): schedules each
+    * `(event ms, payload)` record with [[Schedule.ingestionMs]] against
+    * the anchor `firstMs`, then paces and sends the records in the order
+    * given through [[sendScheduled]], recording each record's lag and the
+    * event-time high-water mark in [[ReplayStats.shared]]. `statsFreq` is
+    * the driver's stats frequency, so an executor JVM that never saw
+    * `configureShared` still logs stats. Returns (records sent, retries). */
+  def replay(records: Iterator[(Long, Array[Byte])], firstMs: Long, startMs: Long,
+      speedup: Double, statsFreq: Long, sender: RecordSender,
+      nowMs: () => Long, sleeper: Long => Unit): (Long, Long) = {
+    ReplayStats.ensureConfigured(statsFreq)
+    // high-water of the record the pacer just admitted: the iterator is
+    // pulled (setting lastTsMs) before onPaced fires for it
+    var lastTsMs = 0L
+    val scheduled = records.map { case (tsMs, payload) =>
+      lastTsMs = tsMs
+      (Schedule.ingestionMs(tsMs, firstMs, startMs, speedup), payload)
+    }
+    sendScheduled(scheduled, sender, nowMs, sleeper,
+      onPaced = lag => ReplayStats.shared.record(lag, lastTsMs))
   }
 }
 
@@ -317,7 +333,6 @@ final class ReplayStats(@volatile var frequencyMillis: Long,
         f"${requests.get()}/${retries.get()} requests/retries)")
     }
   }
-  def totalCount: Long = total.get()
   def requestCount: Long = requests.get()
   def retryCount: Long = retries.get()
   def reset(): Unit = {

@@ -1,7 +1,7 @@
 package graft.replay
 
 import org.apache.spark.FutureAction
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import scala.concurrent.Await
@@ -33,12 +33,16 @@ import scala.concurrent.duration.Duration
   * of replay is the batch path ([[ReplayJob]]): a range-partitioned total
   * sort with per-partition pacing and no driver-side state.
   *
-  * Driver memory: each micro-batch is collected one partition per job,
-  * with up to `defaultParallelism` jobs running at once, and fed to the
-  * buffer in partition-index order, the order a sequential scan would
-  * give, so ties in event time keep their scan order. The driver holds at
-  * most `defaultParallelism` collected partitions plus the buffer's
-  * `readerBufferSize` events (see [[run]]).
+  * Driver memory: each micro-batch is collected as [[Parse.records]],
+  * `(event ms, payload bytes)`, the batch path's record format, one
+  * partition per job, with up to `defaultParallelism` jobs running at
+  * once, and fed to the buffer in partition-index order, the order a
+  * sequential scan would give, so ties in event time keep their scan
+  * order. The driver holds at most `defaultParallelism` collected
+  * partitions plus the buffer's `readerBufferSize` records (see [[run]]).
+  * It computes no due times: each emit ships its records with the
+  * schedule anchor to sink tasks that run [[Sink.replay]], the batch
+  * path's sink task.
   *
   * Durability contract: `run()` is SINGLE-SHOT, like the reference's
   * in-process queue. Micro-batches commit to the (ephemeral, default)
@@ -75,15 +79,15 @@ object StreamingReplay {
     private var seq = 0L
     private var forced = 0L
 
-    def add(ms: Long, payload: String): Unit = synchronized {
+    def add(ms: Long, payload: Array[Byte]): Unit = synchronized {
       pq.add(ReorderBuffer.E(ms, seq, payload)); seq += 1
       if (ms > maxMs) maxMs = ms
     }
     /** Events passed by the horizon, plus capacity overflow — in order.
       * An over-capacity buffer sheds down to half capacity (hysteresis:
       * a saturated buffer releases chunks, never one event per add). */
-    def release(): Vector[(Long, String)] = synchronized {
-      val b = Vector.newBuilder[(Long, String)]
+    def release(): Vector[(Long, Array[Byte])] = synchronized {
+      val b = Vector.newBuilder[(Long, Array[Byte])]
       if (maxMs != Long.MinValue) {
         // saturating subtraction: a huge tolerance against negative-epoch
         // event times must clamp to "never", not wrap around positive
@@ -107,8 +111,8 @@ object StreamingReplay {
       * horizon passed (each one a potential event-time order violation). */
     def forceReleasedCount: Long = synchronized(forced)
     /** End-of-input: everything left, in order. */
-    def drain(): Vector[(Long, String)] = synchronized {
-      val b = Vector.newBuilder[(Long, String)]
+    def drain(): Vector[(Long, Array[Byte])] = synchronized {
+      val b = Vector.newBuilder[(Long, Array[Byte])]
       while (!pq.isEmpty) { val e = pq.poll(); b += ((e.ms, e.payload)) }
       b.result()
     }
@@ -116,7 +120,7 @@ object StreamingReplay {
   }
 
   object ReorderBuffer {
-    private final case class E(ms: Long, seq: Long, payload: String)
+    private final case class E(ms: Long, seq: Long, payload: Array[Byte])
   }
 
   /** Streaming scheduled events. The disorder horizon is enforced by the
@@ -150,21 +154,22 @@ object StreamingReplay {
   /** Paced replay to a [[RecordSender]]. Blocks until the input is drained
     * (AvailableNow) and the reorder buffer is flushed; returns records
     * sent. Events are released from the buffer once the disorder horizon
-    * passes them (or capacity forces them), paced against the affine
-    * schedule anchored at the first released (earliest) event, and sent
-    * over `senderParallelism` lanes, each a contiguous time slice
-    * (per-lane event-time order, like the batch path).
+    * passes them (or capacity forces them), and sent over
+    * `senderParallelism` lanes, each a contiguous time slice (per-lane
+    * event-time order, like the batch path). Each lane is one
+    * [[Sink.replay]] task, paced against the affine schedule anchored at
+    * the first released (earliest) event.
     *
     * Driver-memory bound: the driver holds at most `defaultParallelism`
     * collected partitions of rows (never the whole batch; a partition is
     * at most one `spark.sql.files.maxPartitionBytes` split, or one whole
     * unsplittable compressed file) plus the buffer's
-    * `cfg.readerBufferSize` events, past which it force-releases — one
-    * oversized input file cannot grow the buffer without limit. Each
-    * collect job returns one partition, so `spark.driver.maxResultSize`
-    * applies per partition, never to several at once. See the class
-    * scaladoc for the parallel collect and the single-shot durability
-    * contract. */
+    * `cfg.readerBufferSize` `(event ms, payload bytes)` records, past
+    * which it force-releases — one oversized input file cannot grow the
+    * buffer without limit. Each collect job returns one partition, so
+    * `spark.driver.maxResultSize` applies per partition, never to several
+    * at once. See the class scaladoc for the parallel collect and the
+    * single-shot durability contract. */
   def run(spark: SparkSession, cfg: ReplayConfig, sender: RecordSender,
       nowMs: () => Long = () => System.currentTimeMillis(),
       sleeper: Long => Unit = Thread.sleep,
@@ -177,25 +182,17 @@ object StreamingReplay {
     val sentAcc = spark.sparkContext.longAccumulator("streaming_records_sent")
 
     val statsFreq = cfg.statisticsFrequencyMillis
-    def emit(slice: Vector[(Long, String)]): Unit = if (slice.nonEmpty) {
+    val speedup = cfg.speedupFactor
+    def emit(slice: Vector[(Long, Array[Byte])]): Unit = if (slice.nonEmpty) {
       anchorMs.compareAndSet(Long.MinValue, slice.head._1)
-      val a = anchorMs.get()
-      val speedup = cfg.speedupFactor
-      val scheduled = slice.map { case (ms, payload) =>
-        (Schedule.ingestionMs(ms, a, startMs, speedup), ms,
-          payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+      val firstMs = anchorMs.get()
       // contiguous slices per lane: parallelize preserves element order
       // within each partition → per-lane event-time order holds
       spark.sparkContext
-        .parallelize(scheduled, math.min(cfg.senderParallelism, slice.size))
-        .foreachPartition { (it: Iterator[(Long, Long, Array[Byte])]) =>
-          ReplayStats.ensureConfigured(statsFreq) // real-cluster executors
-          var lastTsMs = 0L // high-water of the record the pacer admitted
-          val recs = it.map { case (due, ms, bytes) => lastTsMs = ms; (due, bytes) }
-          val (n, _) = Sink.sendScheduled(recs, sender, nowMs, sleeper,
-            onPaced = lag => ReplayStats.shared.record(lag, lastTsMs)) // R12
-          sentAcc.add(n)
+        .parallelize(slice, math.min(cfg.senderParallelism, slice.size))
+        .foreachPartition { it =>
+          sentAcc.add(Sink.replay(it, firstMs, startMs, speedup, statsFreq,
+            sender, nowMs, sleeper)._1)
         }
     }
 
@@ -218,17 +215,14 @@ object StreamingReplay {
           // tie-break is unchanged, and the buffer's capacity still releases
           // mid-batch on overflow.
           val sc = spark.sparkContext
-          val rdd = batch
-            .select(col("payload"), unix_millis(col("timestamp")).as("ms"))
-            .rdd
-          def collect(p: Int): FutureAction[Array[(Long, String)]] = {
-            var got: Array[(Long, String)] = null
-            sc.submitJob(rdd,
-              (it: Iterator[Row]) => it.map(r => (r.getLong(1), r.getString(0))).toArray,
-              Seq(p), (_: Int, part: Array[(Long, String)]) => got = part, got)
+          val rdd = Parse.records(batch)
+          def collect(p: Int): FutureAction[Array[(Long, Array[Byte])]] = {
+            var got: Array[(Long, Array[Byte])] = null
+            sc.submitJob(rdd, (it: Iterator[(Long, Array[Byte])]) => it.toArray,
+              Seq(p), (_: Int, part: Array[(Long, Array[Byte])]) => got = part, got)
           }
           val parts = rdd.getNumPartitions
-          val inFlight = scala.collection.mutable.Queue.empty[FutureAction[Array[(Long, String)]]]
+          val inFlight = scala.collection.mutable.Queue.empty[FutureAction[Array[(Long, Array[Byte])]]]
           var next = 0
           try {
             while (next < parts || inFlight.nonEmpty) {

@@ -241,7 +241,6 @@ object ReplayBench {
         // histogram fills regardless of the stats-line cadence
         statisticsFrequencyMillis = Long.MaxValue)
       ReplayStats.configureShared(Long.MaxValue, _ => ())
-      ReplayStats.shared.reset()
       System.gc()
       val t0 = System.nanoTime()
       val sentPaced = ReplayJob.run(spark, pacedCfg, CountingSender)

@@ -202,10 +202,10 @@ class PropertySpec extends SparkSpec {
     } yield (ms, tol, cap)
     check(forAll(gen) { case (ms, tol, cap) =>
       val buf = new ReorderBuffer(tol, cap)
-      val released = scala.collection.mutable.ArrayBuffer[Vector[(Long, String)]]()
+      val released = scala.collection.mutable.ArrayBuffer[Vector[(Long, Array[Byte])]]()
       var capHeld = true
       ms.zipWithIndex.foreach { case (m, i) =>
-        buf.add(m, s"p$i")
+        buf.add(m, s"p$i".getBytes(UTF_8))
         if (buf.size > cap) {
           released += buf.release()
           capHeld &&= buf.size <= cap // shedding must actually shed
@@ -215,7 +215,7 @@ class PropertySpec extends SparkSpec {
       released += buf.drain()
       val all = released.flatten
       // 1. nothing lost, nothing duplicated
-      all.map(_._2).sorted == ms.indices.map(i => s"p$i").sorted &&
+      all.map(e => new String(e._2, UTF_8)).sorted == ms.indices.map(i => s"p$i").sorted &&
         // 2. each release batch is internally event-time ordered
         released.forall(b => b.map(_._1) == b.map(_._1).sorted) &&
         // 3. the hard cap held after every over-capacity release

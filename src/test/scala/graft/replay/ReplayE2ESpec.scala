@@ -308,6 +308,69 @@ class ReplayE2ESpec extends SparkSpec {
     assert(ids(CollectingSender.payloads).sorted == Seq(1, 2, 3, 4, 5, 6))
   }
 
+  /** The cross-micro-batch disorder fixture of the reorder test above:
+    * with maxFilesPerTrigger=1 the first micro-batch holds the LATEST
+    * timestamps. */
+  private def disorderFixture(): String = {
+    val dir = Files.createTempDirectory("replay_disorder")
+    Files.write(dir.resolve("a-late.jsonl"), Seq(
+      """{"id":4,"dropoff_datetime":"2024-01-01T00:03:00Z"}""",
+      """{"id":6,"dropoff_datetime":"2024-01-01T00:05:00Z"}""").mkString("\n").getBytes(UTF_8))
+    Files.write(dir.resolve("b-early.jsonl"), Seq(
+      """{"id":2,"dropoff_datetime":"2024-01-01T00:01:00Z"}""",
+      """{"id":1,"dropoff_datetime":"2024-01-01T00:00:00Z"}""",
+      """{"id":5,"dropoff_datetime":"2024-01-01T00:04:00Z"}""").mkString("\n").getBytes(UTF_8))
+    Files.write(dir.resolve("c-mid.jsonl"), Seq(
+      """{"id":3,"dropoff_datetime":"2024-01-01T00:02:00Z"}""").mkString("\n").getBytes(UTF_8))
+    dir.toString
+  }
+
+  test("streaming replay paces each released event on the schedule anchored at the first one") {
+    val cfg = ReplayConfig(inputPath = disorderFixture(), speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    CollectingSender.clear()
+    SleepRecorder.clear()
+    val sent = StreamingReplay.run(spark, cfg, new CollectingSender(),
+      nowMs = () => 0L, sleeper = SleepRecorder.record,
+      disorderToleranceMs = 600000L, maxFilesPerTrigger = 1)
+    assert(sent == 6)
+    assert(ids(CollectingSender.payloads) == Seq(1, 2, 3, 4, 5, 6))
+    // events 1 min apart at speedup 60000, anchored at the first released
+    // event (id 1, from the second file): due at 0,1,2,3,4,5 ms from a
+    // start of 0; with now pinned at 0 the pacer sleeps exactly that
+    assert(SleepRecorder.all == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("batch and streaming replay send byte-identical payloads (4-byte UTF-8, CRLF, invalid UTF-8)") {
+    val dir = Files.createTempDirectory("replay_bytes")
+    def line(id: Int, extra: String) =
+      s"""{"id":$id,"dropoff_datetime":"2024-01-01T00:0$id:00Z","s":"$extra"}""".getBytes(UTF_8)
+    val astral = line(1, "\uD83D\uDE00") // U+1F600: F0 9F 98 80
+    val crlf = line(2, "crlf")
+    val invalid = line(3, "b?d") // the '?' becomes 0xFF, never valid in UTF-8
+    invalid(invalid.indexOf('?'.toByte)) = 0xFF.toByte
+    val nl = "\n".getBytes(UTF_8)
+    Files.write(dir.resolve("mixed.jsonl"),
+      Array.concat(astral, nl, crlf, "\r\n".getBytes(UTF_8), invalid, nl))
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1)
+    def sent(run: => Long): Seq[Seq[Byte]] = {
+      CollectingSender.clear()
+      assert(run == 3)
+      val it = CollectingSender.received.iterator()
+      val b = Seq.newBuilder[Seq[Byte]]
+      while (it.hasNext) b += it.next().toSeq
+      b.result()
+    }
+    val batch = sent(ReplayJob.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ()))
+    val streaming = sent(StreamingReplay.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ()))
+    val replaced = line(3, "b\uFFFDd") // the invalid byte as EF BF BD
+    assert(batch == Seq(astral ++ nl, crlf ++ nl, replaced ++ nl).map(_.toSeq))
+    assert(streaming == batch)
+  }
+
   test("compressed input (gzip) decodes by extension (R2)") {
     val dir = Files.createTempDirectory("replay_gz")
     val lines = Seq(
@@ -773,5 +836,10 @@ class ReplayE2ESpec extends SparkSpec {
       cfg.streamArn.endsWith("stream/s1") && dry)
     intercept[IllegalArgumentException](ReplayCli.parseArgs(Array("-streamArn", "bogus")))
     intercept[IllegalArgumentException](ReplayCli.parseArgs(Array("-wat")))
+    // -kinesisProducerBuffer is accepted for parity and ignored
+    val (parity, _) = ReplayCli.parseArgs(Array("-kinesisProducerBuffer", "5000"))
+    assert(parity == ReplayConfig())
+    assert(ReplayCli.parseArgs(Array("-readerBufferSize", "50"))._1.readerBufferSize == 50)
+    intercept[IllegalArgumentException](ReplayCli.parseArgs(Array("-kinesisProducerBuffer", "x")))
   }
 }

@@ -213,7 +213,7 @@ class SinkSpec extends AnyFunSuite {
   test("reorder buffer enforces hard capacity, shedding oldest first with hysteresis") {
     val buf = new StreamingReplay.ReorderBuffer(toleranceMs = Long.MaxValue / 2, capacity = 4)
     // tolerance so large the horizon never releases — only capacity can
-    Seq(50L, 10L, 40L, 20L, 30L).foreach(ms => buf.add(ms, s"e$ms"))
+    Seq(50L, 10L, 40L, 20L, 30L).foreach(ms => buf.add(ms, bytes(s"e$ms")))
     assert(buf.size == 5)
     val shed = buf.release()
     // over capacity → shed to capacity/2 = 2, oldest first, in order
@@ -229,7 +229,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("horizon-passed releases do not count as force-released") {
     val buf = new StreamingReplay.ReorderBuffer(toleranceMs = 5L, capacity = 100)
-    Seq(10L, 20L, 100L).foreach(ms => buf.add(ms, s"e$ms"))
+    Seq(10L, 20L, 100L).foreach(ms => buf.add(ms, bytes(s"e$ms")))
     // horizon = 100 - 5 = 95 → 10 and 20 release normally
     assert(buf.release().map(_._1) == Seq(10L, 20L))
     assert(buf.forceReleasedCount == 0)
@@ -237,9 +237,9 @@ class SinkSpec extends AnyFunSuite {
 
   test("reorder buffer horizon saturates: huge tolerance + negative event times never wraps") {
     val buf = new StreamingReplay.ReorderBuffer(Long.MaxValue, capacity = 100)
-    buf.add(-10L, "a"); buf.add(-5L, "b") // pre-epoch event times
+    buf.add(-10L, bytes("a")); buf.add(-5L, bytes("b")) // pre-epoch event times
     assert(buf.release().isEmpty) // an unwrapped horizon would release both
-    assert(buf.drain().map(_._2) == Seq("a", "b"))
+    assert(buf.drain().map(e => new String(e._2, UTF_8)) == Seq("a", "b"))
     intercept[IllegalArgumentException](
       new StreamingReplay.ReorderBuffer(toleranceMs = -1L, capacity = 10))
   }
