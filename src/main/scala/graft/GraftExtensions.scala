@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import graft.functions.{BucketIndex, CosineSimilarity, DotProduct, Int8DotProduct, PackInt8, ShingleHashes, SrpBuckets, TokenBigrams, UnpackInt8}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import graft.functions.{BucketIndex, CosineSimilarity, DotProduct, Int8DotProduct, PackInt8, Sha32KgramHashes, ShingleHashes, SrpBuckets, TokenBigrams, UnpackInt8, WinnowSelect}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * Catalyst expressions as SQL functions, so any session started with
@@ -17,105 +19,61 @@ import graft.functions.{BucketIndex, CosineSimilarity, DotProduct, Int8DotProduc
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-      what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+  private def intLit(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_hashes"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ShingleHashes(exprs(0), intLit(exprs(1), "shingle size"))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("srp_buckets"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SrpBuckets].getName, "srp_buckets"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SrpBuckets(exprs(0), intLit(exprs(1), "tables"), intLit(exprs(2), "bits"))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("token_bigrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TokenBigrams].getName, "token_bigrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TokenBigrams(exprs(0))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("pack_int8"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PackInt8].getName, "pack_int8"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PackInt8(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("unpack_int8"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[UnpackInt8].getName, "unpack_int8"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        UnpackInt8(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("int8_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Int8DotProduct].getName, "int8_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Int8DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bucket_index"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BucketIndex].getName, "bucket_index"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // bounds must be a foldable numeric array (e.g. array(10.0, 20.0)
-        // — DECIMAL literals under ANSI SQL, so coerce per element type)
-        import org.apache.spark.sql.types._
-        val b = exprs(1)
-        if (!b.foldable) throw new IllegalArgumentException(
-          s"bucket_index bounds must be a foldable numeric array, got $b")
-        val bounds = (b.dataType, b.eval()) match {
-          case (ArrayType(et, _), a: org.apache.spark.sql.catalyst.util.ArrayData) =>
-            (0 until a.numElements()).map { i =>
-              if (a.isNullAt(i)) throw new IllegalArgumentException(
-                s"bucket_index bounds must not contain NULL (element $i)")
-              et match {
-                case DoubleType => a.getDouble(i)
-                case FloatType => a.getFloat(i).toDouble
-                case dt: DecimalType =>
-                  a.getDecimal(i, dt.precision, dt.scale).toDouble
-                case IntegerType => a.getInt(i).toDouble
-                case LongType => a.getLong(i).toDouble
-                case other => throw new IllegalArgumentException(
-                  s"bucket_index bounds must be numeric, got element type $other")
-              }
+    def register(name: String, cls: Class[_])(
+        builder: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+
+    register("cosine_sim", classOf[CosineSimilarity])(e =>
+      CosineSimilarity(e(0), e(1)))
+    register("shingle_hashes", classOf[ShingleHashes])(e =>
+      ShingleHashes(e(0), intLit(e(1), "shingle size")))
+    register("srp_buckets", classOf[SrpBuckets])(e =>
+      SrpBuckets(e(0), intLit(e(1), "tables"), intLit(e(2), "bits")))
+    register("token_bigrams", classOf[TokenBigrams])(e => TokenBigrams(e(0)))
+    register("dot_product", classOf[DotProduct])(e => DotProduct(e(0), e(1)))
+    register("pack_int8", classOf[PackInt8])(e => PackInt8(e(0), e(1)))
+    register("unpack_int8", classOf[UnpackInt8])(e => UnpackInt8(e(0), e(1)))
+    register("int8_dot", classOf[Int8DotProduct])(e =>
+      Int8DotProduct(e(0), e(1)))
+    register("bucket_index", classOf[BucketIndex]) { exprs =>
+      // bounds must be a foldable numeric array (e.g. array(10.0, 20.0)
+      // — DECIMAL literals under ANSI SQL, so coerce per element type)
+      import org.apache.spark.sql.types._
+      val b = exprs(1)
+      if (!b.foldable) throw new IllegalArgumentException(
+        s"bucket_index bounds must be a foldable numeric array, got $b")
+      val bounds = (b.dataType, b.eval()) match {
+        case (ArrayType(et, _), a: org.apache.spark.sql.catalyst.util.ArrayData) =>
+          (0 until a.numElements()).map { i =>
+            if (a.isNullAt(i)) throw new IllegalArgumentException(
+              s"bucket_index bounds must not contain NULL (element $i)")
+            et match {
+              case DoubleType => a.getDouble(i)
+              case FloatType => a.getFloat(i).toDouble
+              case dt: DecimalType =>
+                a.getDecimal(i, dt.precision, dt.scale).toDouble
+              case IntegerType => a.getInt(i).toDouble
+              case LongType => a.getLong(i).toDouble
+              case other => throw new IllegalArgumentException(
+                s"bucket_index bounds must be numeric, got element type $other")
             }
-          case other => throw new IllegalArgumentException(
-            s"bucket_index bounds must be a numeric array, got $other")
-        }
-        BucketIndex(exprs(0), bounds)
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("sha32_kgrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.Sha32KgramHashes].getName, "sha32_kgrams"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.Sha32KgramHashes(exprs(0), intLit(exprs(1), "k"))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("winnow_select"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.WinnowSelect].getName, "winnow_select"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.WinnowSelect(exprs(0), intLit(exprs(1), "window"))))
+          }
+        case other => throw new IllegalArgumentException(
+          s"bucket_index bounds must be a numeric array, got $other")
+      }
+      BucketIndex(exprs(0), bounds)
+    }
+    register("sha32_kgrams", classOf[Sha32KgramHashes])(e =>
+      Sha32KgramHashes(e(0), intLit(e(1), "k")))
+    register("winnow_select", classOf[WinnowSelect])(e =>
+      WinnowSelect(e(0), intLit(e(1), "window")))
   }
 }

@@ -41,28 +41,25 @@ object DedupOps {
 
   // Shared relations cached per (application, SF dir) — see PerAppCache
   // for the keying rationale.
-  import PerAppCache.{newCache, cachedPerApp}
+  import PerAppCache.cachedPerApp
 
   // the (doc_id, shh) shingle relation: each query reuses it on 2-3 plan
   // branches, and x26/x26b share it (~100k rows each at fixture SF)
-  @transient private val shCache = newCache
   private def persistShingles(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(shCache, s, d)(
+    cachedPerApp("DedupOps.shingles", s, d)(
       PerAppCache.persistSpread(s, shingleHashRows(s, d)))
 
   // the verified near-dup pair relation: feeds the pair query (x26) and
   // the cluster build, so the O(shared-shingle) self-join is paid once
-  @transient private val pairCache = newCache
   private def persistPairs(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(pairCache, s, d)(
+    cachedPerApp("DedupOps.pairs", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData
         .nearDupPairsFromShingles(persistShingles(s, d), 0.5)))
 
   // cluster labels over the pairs: shared by x26e and x26g; the iterative
   // CC run is paid once, its result backed by a checkpointed RDD
-  @transient private val labelCache = newCache
   private def persistLabels(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(labelCache, s, d)(
+    cachedPerApp("DedupOps.labels", s, d)(
       connectedComponents(persistPairs(s, d).select(col("d1"), col("d2"))))
 
   /** X25 — exact dedup by content hash: clusters of byte-identical texts,
@@ -132,9 +129,8 @@ object DedupOps {
   // inside the scan makes the build one narrow pass (~0.5 s), and the
   // bit-equality of the two forms is asserted in TextExprSpec — the
   // DuckDB oracle still replays the full algorithm unchanged.
-  @transient private val sigCache = newCache
   private def persistShaSignatures(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(sigCache, s, d)(
+    cachedPerApp("DedupOps.shaSignatures", s, d)(
       PerAppCache.persistSpread(s, t(s, d, "documents")
         .select(col("doc_id"),
           graft.functions.TextFunctions
@@ -418,9 +414,8 @@ object DedupOps {
   // the quantized tf·idf weight relation: the pair pipeline references it
   // on three branches (norms + both posting-list join sides), so the
   // tokenize→tf→df→idf build is paid once per app/dir, not per branch
-  @transient private val tfidfCache = newCache
   private def persistTfidfWeights(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(tfidfCache, s, d)(
+    cachedPerApp("DedupOps.tfidfWeights", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData.tfidfWeights(
         t(s, d, "documents"), "doc_id", "text", 0.5)))
 
@@ -506,9 +501,8 @@ object DedupOps {
   // so two filter branches over the unpersisted relation would re-read
   // documents.parquet twice (2× I/O at 100 TB for zero pruning).
   // Materialized once per app/dir; PlanSpec asserts the single scan.
-  @transient private val splitCache = newCache
   private def persistSplit(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(splitCache, s, d)(
+    cachedPerApp("DedupOps.split", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData.deterministicSplit(
         t(s, d, "documents").select(col("doc_id"), col("text")), "doc_id",
         Seq(("train", 80), ("val", 10), ("test", 10)))))
@@ -548,9 +542,8 @@ object DedupOps {
   // scan it): keyed per app/dir so repeat constructions — two timed bench
   // runs, the PlanSpec schema sweep — reuse ONE cached copy instead of
   // stacking a new persisted relation per call
-  @transient private val probeShCache = newCache
   private def persistProbeShingles(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(probeShCache, s, d)(
+    cachedPerApp("DedupOps.probeShingles", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData.shingles(
         t(s, d, "documents").filter(col("doc_id") < 50), "doc_id", "text")))
 
@@ -597,7 +590,7 @@ object DedupOps {
     * near-dup survivorship by n_chars, quality floor at 100 chars.
     * Fixture binding of [[graft.api.TrainingData.curationVerdicts]]. */
   def x62CurationReport(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(x62Cache, s, d) {
+    cachedPerApp("DedupOps.x62Report", s, d) {
       val docs = t(s, d, "documents")
       // the verdict relation is one small row per doc, but the cascade
       // behind it (pair verifier + eager cluster closure + containment)
@@ -609,7 +602,6 @@ object DedupOps {
         docs.filter(col("doc_id") < 50), jaccardThreshold = 0.5,
         containmentThreshold = 0.5, minScore = 100.0).persist()
     }.orderBy(col("doc_id"))
-  @transient private val x62Cache = newCache
 
   /** X60 — n-gram novelty: each doc with id ≥ 250 scored for the
     * fraction of its shingles absent from the id < 250 reference half —
@@ -653,9 +645,8 @@ object DedupOps {
         .reduce(_ + _).as("simhash"))
   }
 
-  @transient private val simhashCache = PerAppCache.newCache
   private def persistSimhash(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(simhashCache, s, d)(
+    cachedPerApp("DedupOps.simhash", s, d)(
       PerAppCache.persistSpread(s,
         simhashSignatures(t(s, d, "documents").select(col("doc_id"), col("text")))))
 
@@ -733,9 +724,8 @@ object DedupOps {
     * [[graft.api.TrainingData.sortedNeighborhoodPairs]]. */
   // the SNM pair relation is consumed by both x137 (the pairs) and
   // x137b (the recall audit) — computed once per app per fixture
-  @transient private val snmCache = newCache
   private def persistSnmPairs(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(snmCache, s, d)(
+    cachedPerApp("DedupOps.snmPairs", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData
         .sortedNeighborhoodPairs(
           t(s, d, "documents"), "doc_id", "text", w = 3)))
@@ -937,9 +927,8 @@ object DedupOps {
   // 1-row regime count) — computed once per app per fixture, the
   // shingle/pair-cache discipline (r16; the enumeration pays 2 corpus
   // windows + the banded join, the dominant cost of both queries)
-  @transient private val typoCandCache = newCache
   private def persistTypoCandidates(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(typoCandCache, s, d)(
+    cachedPerApp("DedupOps.typoCandidates", s, d)(
       blockedCandidates(typoFixture(s, d), "doc_id", "head",
         blockPrefix = 8, maxBlockSize = 256, window = 32)
         // AQE coalesces the enumeration to ONE partition (candidate
@@ -953,9 +942,8 @@ object DedupOps {
         // at 100 TB — the knob is the scheduler's, not a constant).
         .repartition(s.sparkContext.defaultParallelism).persist())
 
-  @transient private val typoOversizedCache = newCache
   private def persistTypoOversized(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(typoOversizedCache, s, d)(
+    cachedPerApp("DedupOps.typoOversized", s, d)(
       oversizedBlockCount(typoFixture(s, d), "doc_id", "head", 8, 256)
         .persist())
 
@@ -1246,29 +1234,25 @@ object DedupOps {
   // computed once per app per fixture (r16) — the ground truth is the
   // family's deliberate quadratic (~235k DL matrix evaluations on the
   // FIXED fixture) and was being paid twice.
-  @transient private val digitVariantsCache = newCache
   private def persistDigitVariants(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(digitVariantsCache, s, d)(digitVariants(s, d))
+    cachedPerApp("DedupOps.digitVariants", s, d)(digitVariants(s, d))
 
-  @transient private val digitCapACache = newCache
   private def persistDigitCapA(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(digitCapACache, s, d)(
+    cachedPerApp("DedupOps.digitCapA", s, d)(
       typoNearDupPairs(persistDigitVariants(s, d), "id", "key",
         blockPrefix = 8, maxDist = 2)
         .select(col("id1"), col("id2")).persist())
 
-  @transient private val digitCapBCache = newCache
   private def persistDigitCapB(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(digitCapBCache, s, d)(
+    cachedPerApp("DedupOps.digitCapB", s, d)(
       typoNearDupPairs(
         persistDigitVariants(s, d)
           .select(col("id"), reverse(col("key")).as("key")),
         "id", "key", blockPrefix = 8, maxDist = 2)
         .select(col("id1"), col("id2")).persist())
 
-  @transient private val digitExactCache = newCache
   private def persistDigitExactCount(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(digitExactCache, s, d)(
+    cachedPerApp("DedupOps.digitExactCount", s, d)(
       typoNearDupPairs(persistDigitVariants(s, d), "id", "key",
         blockPrefix = 8, maxDist = 2, maxBlockSize = 1 << 20)
         .agg(count(lit(1)).as("n_exact")).persist())

@@ -76,9 +76,8 @@ object ReplayQueries {
   // r03 and r04 rank the SAME (event_id, ts) relation: persist the ranked
   // result per app/dir so the second query reuses the first's sequence —
   // the same PerAppCache keying as the dedup shingle/pair relations.
-  @transient private val rankCache = PerAppCache.newCache
   private def persistEmitRank(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(rankCache, s, d)(
+    PerAppCache.cachedPerApp("ReplayQueries.emitRank", s, d)(
       withEmitRank(t(s, d, "events").select(col("event_id"), col("ts")), d)
         .select(col("event_id"), col("ts"), col("emit_rank"))
         .persist())

@@ -502,9 +502,8 @@ object SamplingOps {
   // (model counts, λ broadcast, final per-doc sum): persisted per
   // (app, dir) like the shingle/signature relations, so the corpus is
   // exploded once rather than once per branch
-  @transient private val dsirFeatCache = graft.ops.PerAppCache.newCache
   private def persistDsirFeats(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(dsirFeatCache, s, d)(
+    graft.ops.PerAppCache.cachedPerApp("SamplingOps.dsirFeatures", s, d)(
       graft.api.TrainingData.dsirBucketedPortable(t(s, d, "documents"),
         "doc_id", "text", col("lang") === "en", nBuckets = 256).persist())
 

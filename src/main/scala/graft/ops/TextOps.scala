@@ -15,24 +15,21 @@ object TextOps {
   // (Spark re-scans per branch on unpersisted lineage), and the bigram
   // scorer's vocabulary rides the token relation instead of a third
   // corpus pass. See PerAppCache for the eviction/footprint contract.
-  import PerAppCache.{newCache, cachedPerApp}
-  private val tfCache = newCache
-  private val bgCache = newCache
+  import PerAppCache.cachedPerApp
   private def tfRel(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(tfCache, s, d)(
+    cachedPerApp("TextOps.tokenCounts", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData
         .tokenCounts(t(s, d, "documents"), "doc_id", "text")))
   private def bgRel(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(bgCache, s, d)(
+    cachedPerApp("TextOps.bigramCounts", s, d)(
       PerAppCache.persistSpread(s, graft.api.TrainingData
         .bigramCounts(t(s, d, "documents"), "doc_id", "text")))
   // the per-doc bigram-LM score relation, shared by x28n and x44: the
   // curriculum query references the scores on two plan branches (the
   // threshold aggregation and the bucket join), which re-ran the whole
   // surprisal lineage per branch before this was persisted
-  private val nllCache = newCache
   private def nllRel(s: SparkSession, d: String): DataFrame =
-    cachedPerApp(nllCache, s, d)(
+    cachedPerApp("TextOps.bigramLmScores", s, d)(
       PerAppCache.persistSpread(s,
         graft.api.TrainingData.bigramLmScoresFromCounts(bgRel(s, d),
           graft.api.TrainingData.vocabularyFromCounts(tfRel(s, d)))))
@@ -356,26 +353,17 @@ object TextOps {
   def x28mHeavyHitters(s: SparkSession, d: String): DataFrame =
     graft.api.TrainingData.heavyHitters(t(s, d, "documents"), "text", 10)
 
-  // One BPE training per (app, dir): the vocab relation rides PerAppCache
-  // (persisted — both fixture queries and every training round's argmax
-  // consume it), and the merge table — a literal 8-row relation with
-  // nothing to persist — rides a plain memo keyed the same way, filled by
-  // the same build (training produces both at once; stale-app entries are
-  // driver-side literals, nothing to release).
-  private val bpeVocabCache = PerAppCache.newCache
-  private val bpeMergesMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def bpeTrained(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(bpeVocabCache, s, d) {
+  // One BPE training per (app, dir): the merge table (a literal 8-row
+  // relation, nothing to persist) and the persisted vocab (both fixture
+  // queries and every training round's argmax consume it) come out of
+  // the same bpeTrain call, so one site holds the pair.
+  private def bpeTrained(s: SparkSession,
+      d: String): (DataFrame, DataFrame) =
+    cachedPerApp("TextOps.bpe", s, d) {
       val (merges, vocab) = graft.api.TrainingData.bpeTrain(
         t(s, d, "documents"), "doc_id", "text", numMerges = 8)
-      bpeMergesMemo((s.sparkContext.applicationId, d)) = merges
-      vocab.persist()
+      (merges, vocab.persist())
     }
-  private def bpeMerges(s: SparkSession, d: String): DataFrame = {
-    bpeTrained(s, d)
-    bpeMergesMemo((s.sparkContext.applicationId, d))
-  }
 
   /** X28 — BPE tokenizer TRAINING, distributed: the merge table learned
     * from the corpus itself — 8 rounds of most-frequent-adjacent-pair
@@ -386,7 +374,7 @@ object TextOps {
     * pair-count/argmax/fold rounds — via list_reduce (ORACLES.md).
     * Fixture binding of [[graft.api.TrainingData.bpeTrain]]. */
   def x28oBpeTrain(s: SparkSession, d: String): DataFrame =
-    bpeMerges(s, d).orderBy(col("iter"))
+    bpeTrained(s, d)._1.orderBy(col("iter"))
 
   /** X28 — segmentation under the trained tokenizer: every document's
     * token sequence rewritten as the learned pieces (equi-join on the
@@ -395,7 +383,7 @@ object TextOps {
     * over the cached [[bpeTrained]] vocabulary. */
   def x28pBpeSegment(s: SparkSession, d: String): DataFrame =
     graft.api.TrainingData.bpeSegment(
-      t(s, d, "documents"), "doc_id", "text", bpeTrained(s, d))
+      t(s, d, "documents"), "doc_id", "text", bpeTrained(s, d)._2)
       .orderBy(col("doc_id"))
 
   // Half-corpus tokenizer for x52: trained on doc_id < 250 only, so the
@@ -403,9 +391,8 @@ object TextOps {
   // vocab contains every word by construction and the analysis would be
   // vacuous (fixture and stress corpora both keep ids below 250 plus
   // high-id rows, so the split is non-degenerate at every vintage).
-  private val bpeHalfVocabCache = PerAppCache.newCache
   private def bpeHalfTrained(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(bpeHalfVocabCache, s, d) {
+    cachedPerApp("TextOps.bpeHalf", s, d) {
       val (_, vocab) = graft.api.TrainingData.bpeTrain(
         t(s, d, "documents").filter(col("doc_id") < 250),
         "doc_id", "text", numMerges = 8)
@@ -422,34 +409,17 @@ object TextOps {
       t(s, d, "documents"), "doc_id", "text", bpeHalfTrained(s, d))
       .orderBy(col("doc_id"))
 
-  // Batched BPE training cached the same way: one build per (app, dir)
-  // fills both the vocab (persisted relation) and the merge table (a
-  // driver-side literal).
-  private val bpeBatchVocabCache = PerAppCache.newCache
-  // the merge table is a ≤(rounds·batch)-row driver literal: memoized as
-  // plain rows, NOT a DataFrame — a DataFrame here would pin lineage to
-  // a possibly-stopped SparkContext and sit outside PerAppCache's
-  // eviction (round-8 review); stale (appId, dir) keys now cost bytes,
-  // and other-app keys are dropped on access like cachedPerApp does
-  private val bpeBatchMergesMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String),
-      (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]
-  private def bpeBatchTrained(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(bpeBatchVocabCache, s, d) {
+  // Batched BPE training cached the same way. The merge table is a
+  // ≤(rounds·batch)-row relation whose lineage reruns the training
+  // rounds, so it is collected once into a local relation.
+  private def bpeBatchTrained(s: SparkSession,
+      d: String): (DataFrame, DataFrame) =
+    cachedPerApp("TextOps.bpeBatched", s, d) {
       val (merges, vocab) = graft.api.TrainingData.bpeTrainBatched(
         t(s, d, "documents"), "doc_id", "text", rounds = 4, batch = 4)
-      bpeBatchMergesMemo((s.sparkContext.applicationId, d)) =
-        (merges.schema, merges.collect())
-      vocab.persist()
+      (s.createDataFrame(java.util.Arrays.asList(merges.collect(): _*),
+        merges.schema), vocab.persist())
     }
-  private def bpeBatchMerges(s: SparkSession, d: String): DataFrame = {
-    bpeBatchTrained(s, d)
-    val appId = s.sparkContext.applicationId
-    bpeBatchMergesMemo.keys.filter(_._1 != appId)
-      .foreach(bpeBatchMergesMemo.remove)
-    val (schema, rows) = bpeBatchMergesMemo((appId, d))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
 
   /** X28 — BATCHED BPE training, the at-scale twin of [[x28oBpeTrain]]:
     * 4 rounds × up to 4 symbol-disjoint merges per round = 16 merges in
@@ -462,14 +432,14 @@ object TextOps {
     * and the batch fold is a list_reduce whose fuse condition is
     * membership in the round's admitted-pair list (ORACLES.md). */
   def x28qBpeTrainBatched(s: SparkSession, d: String): DataFrame =
-    bpeBatchMerges(s, d).orderBy(col("round"), col("rank"))
+    bpeBatchTrained(s, d)._1.orderBy(col("round"), col("rank"))
 
   /** X28 — segmentation under the BATCHED tokenizer: [[x28pBpeSegment]]
     * with the 16-merge batched vocabulary, proving the batched schedule
     * produces a usable end-to-end tokenizer (not just a merge table). */
   def x28rBpeSegmentBatched(s: SparkSession, d: String): DataFrame =
     graft.api.TrainingData.bpeSegment(
-      t(s, d, "documents"), "doc_id", "text", bpeBatchTrained(s, d))
+      t(s, d, "documents"), "doc_id", "text", bpeBatchTrained(s, d)._2)
       .orderBy(col("doc_id"))
 
   /** X41 — C4-style line/boilerplate filtering

@@ -211,15 +211,13 @@ object VectorOps {
   // Lloyd collects eagerly — even schema-only consumers paid the build.
   // Centroids are a k×dims literal relation (nothing to persist); the
   // assigned corpus is persisted because probe joins reference it lazily.
-  @transient private val ivfCentroidCache = PerAppCache.newCache
   private def persistIvfCentroids(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(ivfCentroidCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.ivfCentroids", s, d)(
       ivfCentroids(s,
         t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         nClusters = 16))
-  @transient private val ivfIndexCache = PerAppCache.newCache
   private def persistIvfIndexed(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(ivfIndexCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.ivfIndexed", s, d)(
       ivfAssign(t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         persistIvfCentroids(s, d)).persist())
 
@@ -505,9 +503,8 @@ object VectorOps {
   // x26d references it on both all-pairs sides and x26f on three branches
   // (bucketing + both verify attaches) — one persisted copy per app/dir
   // serves them all
-  @transient private val normedCache = PerAppCache.newCache
   private def persistNormedEmb(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(normedCache, s, d) {
+    PerAppCache.cachedPerApp("VectorOps.normedEmbeddings", s, d) {
       import graft.functions.VectorFunctions.dot_product
       // norms precomputed per vector: the all-pairs scan pays one dot per
       // pair instead of dot+2 norms (bit-equal: identical fold order);
@@ -664,14 +661,12 @@ object VectorOps {
   // Lloyd collects (PqM×16×PqDsub = 1024 scalars each — only those reach
   // the driver); codes are persisted because the ADC join references
   // them lazily.
-  @transient private val pqBookCache = PerAppCache.newCache
   private def persistPqBooks(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(pqBookCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.pqBooks", s, d)(
       pqCodebooks(s, t(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         M = PqM, K = 16)._1)
-  @transient private val pqCodeCache = PerAppCache.newCache
   private def persistPqCodes(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(pqCodeCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.pqCodes", s, d)(
       pqAssign(subvecs(
           t(s, d, "embeddings").select(col("vec_id"), col("embedding")), PqM, 64),
         persistPqBooks(s, d))
@@ -737,9 +732,8 @@ object VectorOps {
     * componentwise in DOUBLE then cast back to float — the exact IEEE
     * operation sequence the oracle mirrors, so residuals are bit-equal
     * cross-engine. Row-local after one broadcast join. */
-  @transient private val resCorpusCache = PerAppCache.newCache
   private def persistResidualCorpus(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(resCorpusCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.residualCorpus", s, d)(
       persistIvfIndexed(s, d)
         .join(broadcast(persistIvfCentroids(s, d)), "cid")
         .select(col("vec_id"),
@@ -747,13 +741,11 @@ object VectorOps {
             (a, b) => (a.cast("double") - b.cast("double")).cast("float"))
             .as("embedding"))
         .persist())
-  @transient private val resPqBookCache = PerAppCache.newCache
   private def persistResPqBooks(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(resPqBookCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.residualPqBooks", s, d)(
       pqCodebooks(s, persistResidualCorpus(s, d), M = PqM, K = 16)._1)
-  @transient private val resPqCodeCache = PerAppCache.newCache
   private def persistResPqCodes(s: SparkSession, d: String): DataFrame =
-    PerAppCache.cachedPerApp(resPqCodeCache, s, d)(
+    PerAppCache.cachedPerApp("VectorOps.residualPqCodes", s, d)(
       pqAssign(subvecs(persistResidualCorpus(s, d), PqM, 64),
         persistResPqBooks(s, d))
         .select(col("vec_id"), col("m"), col("cid")).persist())

@@ -29,6 +29,16 @@ object StreamingOps {
     }
   }
 
+  /** A child session of `s` (`newSession()`: shared SparkContext and
+    * table cache, isolated SQLConf and temp views) whose state store is
+    * RocksDB, for the transformWithState gates. */
+  private def rocksDbSession(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s2
+  }
+
   /** A fresh (emptied) per-app per-fixture sink directory for a gate's
     * executor-side parquet readout. */
   private def freshGateDir(s: SparkSession, tag: String,
@@ -228,9 +238,8 @@ object StreamingOps {
     * readout is [[gateToParquet]]: output here is one row per purchase
     * (input-proportional), exactly the shape a driver-resident memory
     * sink must not hold. */
-  @transient private val lojGateCache = graft.ops.PerAppCache.newCache
   def x101StreamLeftJoin(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(lojGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x101Gate", s, d) {
       import s.implicits._
       val evs = graft.Tables.t(s, d, "events")
         .filter(col("event_id").isNotNull && col("user_id").isNotNull &&
@@ -290,9 +299,8 @@ object StreamingOps {
     * evidence both stateful operators composed correctly. Identical
     * redelivered payloads make the surviving row deterministic (the x75
     * contract). */
-  @transient private val chainGateCache = graft.ops.PerAppCache.newCache
   def x105ChainedStateful(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(chainGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x105Gate", s, d) {
       import s.implicits._
       val evs = graft.Tables.t(s, d, "events")
         .filter(col("event_id").isNotNull && col("event_type").isNotNull &&
@@ -378,9 +386,8 @@ object StreamingOps {
     * exactly |batch 0| — proving the no-op is the batch-id key's doing,
     * not payload-level dedup. The registered output is invariant to
     * both appends, so the oracle is untouched. */
-  @transient private val upsertGateCache = graft.ops.PerAppCache.newCache
   def x134UpsertSink(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(upsertGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x134Gate", s, d) {
       val logDir = freshGateDir(s, "x134_log", d)
       val src = eventsStream(s, d)
         .filter(col("event_id").isNotNull && col("user_id").isNotNull &&
@@ -461,9 +468,8 @@ object StreamingOps {
     * pass the last real window — advancing only one would hold the
     * global min back forever). Completed output = batch window counts
     * over all events. */
-  @transient private val unionGateCache = graft.ops.PerAppCache.newCache
   def x115MultisourceUnion(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(unionGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x115Gate", s, d) {
       import s.implicits._
       val evs = graft.Tables.t(s, d, "events")
         .filter(col("event_id").isNotNull && col("event_type").isNotNull &&
@@ -645,9 +651,8 @@ object StreamingOps {
     * aggregation is a distributed groupBy over that log; at production
     * scale the same state machine writes to a real sink and this
     * projection is the consumer's. */
-  @transient private val funnelGateCache = graft.ops.PerAppCache.newCache
   def x24StatefulFunnel(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(funnelGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x24Gate", s, d) {
       val log = gateToParquet(s, "x24_funnel", d,
         funnelWithState(s, eventsStream(s, d),
           Seq("view", "click", "purchase")).toDF(), "update")(
@@ -674,9 +679,8 @@ object StreamingOps {
     * completion per (app, dir), with the (input-proportional, one row
     * per matched purchase) result landing in executor-written parquet
     * via [[runToParquet]] — never a driver-resident sink. */
-  @transient private val ssjGateCache = graft.ops.PerAppCache.newCache
   def x42StreamJoin(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(ssjGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x42Gate", s, d) {
       runToParquet(s, "x42_ssj", d)(purchaseSignupJoin(eventsStream(s, d)))
     }.orderBy(col("purchase_id"), col("signup_id"))
 
@@ -714,13 +718,10 @@ object StreamingOps {
     }
   }
 
-  @transient private val twsGateCache = graft.ops.PerAppCache.newCache
   def x43TransformWithState(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(twsGateCache, s, d) {
-      val s2 = s.newSession()
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x43Gate", s, d) {
+      val s2 = rocksDbSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // the update log lands in parquet (executor writes); the readback
       // runs on the CALLER's session — the RocksDB child session is gone
       // after this gate
@@ -769,13 +770,10 @@ object StreamingOps {
     }
   }
 
-  @transient private val twsMapGateCache = graft.ops.PerAppCache.newCache
   def x43bTwsMapState(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(twsMapGateCache, s, d) {
-      val s2 = s.newSession()
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x43bGate", s, d) {
+      val s2 = rocksDbSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       gateToParquet(s, "x43b_tws", d, eventsStream(s2, d)
           .select(col("user_id"), col("event_type"))
           .as[TypedRow]
@@ -840,15 +838,12 @@ object StreamingOps {
     * row emits through [[QuotaProcessor.handleExpiredTimer]] in the
     * no-data batch — the gate proves the timer path is the only exit.
     * Oracle: batch counts with least/greatest quota arithmetic. */
-  @transient private val quotaGateCache = graft.ops.PerAppCache.newCache
   def x116QuotaAdmission(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(quotaGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x116Gate", s, d) {
       // transformWithState needs a multi-column-family state store:
       // RocksDB on a child session (the x43 pattern)
-      val s2 = s.newSession()
+      val s2 = rocksDbSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val evs = graft.Tables.t(s2, d, "events")
         .filter(col("event_id").isNotNull && col("event_type").isNotNull &&
           col("ts").isNotNull)
@@ -953,13 +948,10 @@ object StreamingOps {
     * on the x43 RocksDB child session. Equality with batch gap
     * sessionization is direct evidence the TIMER path fired for every
     * user — the x55 argument, transplanted to the modern API. */
-  @transient private val twsTimerGateCache = graft.ops.PerAppCache.newCache
   def x43cTwsTimers(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(twsTimerGateCache, s, d) {
-      val s2 = s.newSession()
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x43cGate", s, d) {
+      val s2 = rocksDbSession(s)
       import s2.implicits._
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val evs = graft.Tables.t(s2, d, "events")
         .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
         // fixture-bounded driver collect — MemoryStream input-side only
@@ -1002,9 +994,8 @@ object StreamingOps {
     * feeds the gate — multi-batch watermark control needs it; the input
     * is bounded by the fixture, and the production path reads a real
     * source. */
-  @transient private val sessGateCache = graft.ops.PerAppCache.newCache
   def x55SessionTimeout(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(sessGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x55Gate", s, d) {
       import s.implicits._
       val evs = graft.Tables.t(s, d, "events")
         .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"))
@@ -1048,9 +1039,8 @@ object StreamingOps {
     * [[runToParquet]] (executor-side parquet append per micro-batch) —
     * no O(data) collect on the driver, unlike the aggregate-sized
     * memory-sink gates. */
-  @transient private val redeliveryGateCache = graft.ops.PerAppCache.newCache
   def x75StreamDedupRedelivery(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(redeliveryGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x75Gate", s, d) {
       val ev = eventsStream(s, d)
       runToParquet(s, "x75_dedup", d) {
         ev.union(ev)
@@ -1071,9 +1061,8 @@ object StreamingOps {
     * join, which is the oracle. The enriched stream is O(input), so the
     * readout is [[runToParquet]] — per-batch executor-side parquet
     * append, no O(data) collect on the driver. */
-  @transient private val enrichGateCache = graft.ops.PerAppCache.newCache
   def x87StreamStaticEnrich(s: SparkSession, d: String): DataFrame =
-    graft.ops.PerAppCache.cachedPerApp(enrichGateCache, s, d) {
+    graft.ops.PerAppCache.cachedPerApp("StreamingOps.x87Gate", s, d) {
       val dim = graft.Tables.t(s, d, "documents")
         .select(col("doc_id"), col("source"))
       runToParquet(s, "x87_enrich", d) {

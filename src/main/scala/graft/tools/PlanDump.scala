@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -21,14 +21,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session("graft-plandump")
     val sb = new StringBuilder
     sb.append("# Physical plan audit\n\n")
     sb.append(s"Generated by `graft.tools.PlanDump` on `$sfDir`. For each query: the\n")
@@ -36,17 +29,16 @@ object PlanDump {
     sb.append("mode, exchanges, codegen spans) plus the parquet PushedFilters.\n\n")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val plan = formatted(fn(spark, sfDir))
         // plan tree only (details section repeats every operator)
-        val tree = formatted.linesIterator.takeWhile(!_.matches("^\\(\\d+\\) .*")).toSeq
+        val tree = plan.linesIterator.takeWhile(!_.matches("^\\(\\d+\\) .*")).toSeq
         val ops = tree
           .filter(l => Interesting.exists(l.contains))
           .map(_.replaceAll("\\(\\d+\\)", "").replaceAll("^[\\s+:*-]+", "").trim)
           .filter(_.nonEmpty)
         val opCounts = ops.groupBy(identity).view.mapValues(_.size).toSeq.sortBy(_._1)
           .map { case (op, n) => if (n > 1) s"$op ×$n" else op }
-        val pushed = formatted.linesIterator
+        val pushed = plan.linesIterator
           .filter(_.contains("PushedFilters"))
           .map(_.trim).filterNot(_.endsWith("PushedFilters: []")).toSeq
         sb.append(s"## $name\n")
@@ -61,4 +53,21 @@ object PlanDump {
     println(s"wrote $out")
     spark.stop()
   }
+
+  /** The `local[4]` session both plan tools explain queries in. */
+  private[tools] def session(appName: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master("local[4]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** `df`'s `.explain("formatted")` text. */
+  private[tools] def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 }

@@ -3,7 +3,6 @@ package graft.tools
 import graft.replay._
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Throughput benchmark for the replay pipeline itself (the reference's
   * own workload): N JSON-lines events through scan→parse→order→schedule→
@@ -15,13 +14,6 @@ import java.util.concurrent.atomic.AtomicLong
   * Usage: sbt "runMain graft.tools.ReplayBench [nEvents]"
   * Prints one JSON line: {"metric":"replay_throughput","value":<events/s>,...}
   */
-object CountingSender extends RecordSender {
-  val count = new AtomicLong(0)
-  override def send(records: Seq[Array[Byte]]): Seq[Int] = {
-    count.addAndGet(records.size); Nil
-  }
-}
-
 object ReplayBench {
   def main(args: Array[String]): Unit = {
     val requested = if (args.length > 0) args(0).toLong else 2000000L
@@ -96,7 +88,8 @@ object ReplayBench {
       senderParallelism = 32)
     def onePass(): Double = {
       val t0 = System.nanoTime()
-      val sent = ReplayJob.run(spark, cfg, CountingSender, nowMs = () => Long.MaxValue / 2)
+      val sent = ReplayJob.run(spark, cfg, new DiscardingSender(),
+        nowMs = () => Long.MaxValue / 2)
       require(sent == n, s"pipeline dropped rows: sent $sent of $n")
       (System.nanoTime() - t0) / 1e9
     }
@@ -243,7 +236,7 @@ object ReplayBench {
       ReplayStats.configureShared(Long.MaxValue, _ => ())
       System.gc()
       val t0 = System.nanoTime()
-      val sentPaced = ReplayJob.run(spark, pacedCfg, CountingSender)
+      val sentPaced = ReplayJob.run(spark, pacedCfg, new DiscardingSender())
       val pacedSec = (System.nanoTime() - t0) / 1e9
       require(sentPaced == n, s"paced pass dropped rows: sent $sentPaced of $n")
       val p50 = ReplayStats.shared.lagPercentileMs(0.50)
