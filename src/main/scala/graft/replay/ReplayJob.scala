@@ -10,7 +10,8 @@ import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
 
 /** The whole replay pipeline, wired like RePlayer.main (SURVEY.md §3.1):
-  * a declarative source → parse → seek plan feeding a paced sink:
+  * a `text` source scan, then one parse-and-seek pass per line feeding a
+  * paced sink:
   *
   *   source (R1–R4) → parse (R5–R6) → seek (R7) → order (R8)
   *     → schedule (R6/R9) → paced batched sink (R9–R11) → stats (R12)
@@ -32,8 +33,9 @@ object ReplayJob {
     * RePlayer.java:28).
     *
     * A pass is three Spark jobs:
-    *   1. scan, decode, parse and seek (codegen'd SQL), kept as
-    *      [[Parse.records]] rows, `(event ms, payload bytes)`, persisted
+    *   1. scan and decode the `text` source, then parse and seek each
+    *      line in one pass ([[Parse.records]]: one Jackson byte-parser pass
+    *      per line), kept as `(event ms, payload bytes)` rows, persisted
     *      `MEMORY_AND_DISK` and folded to the schedule anchor (min event
     *      time) and the row count;
     *   2. the range partitioner's sample of event times, over the cache
@@ -61,10 +63,10 @@ object ReplayJob {
   def run(spark: SparkSession, cfg: ReplayConfig, sender: RecordSender,
       nowMs: () => Long = () => System.currentTimeMillis(),
       sleeper: Long => Unit = Thread.sleep): Long = {
+    Parse.requireAddressable(cfg.timestampAttributeName)
     val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
-    val events = Parse.seek(
-      Parse.parsed(Source.jsonLines(spark, cfg), cfg.timestampAttributeName), cfg.seek)
-    val rows = Parse.records(events).persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = Parse.records(Source.jsonLines(spark, cfg), cfg.timestampAttributeName, cfg.seek)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val (firstMs, count) = rows.aggregate((Long.MaxValue, 0L))(
         (acc, r) => (math.min(acc._1, r._1), acc._2 + 1),

@@ -32,7 +32,7 @@ object Source {
     * nothing for those. An empty suffix skips nothing (endsWith("") is
     * vacuously true of every path — "skip everything" can never be the
     * intent of an empty CLI value). The streaming path applies the same
-    * decoded-path semantics (StreamingReplay.stream). */
+    * decoded-path semantics (StreamingReplay.run). */
   def listFiles(spark: SparkSession, path: String, suffixToSkip: String): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

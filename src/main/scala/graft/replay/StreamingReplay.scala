@@ -8,8 +8,10 @@ import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
 /** Structured Streaming form of the replay pipeline (SURVEY.md §2A R8/R14
-  * mapping): `readStream` text source → parse → bounded reorder → paced
-  * sink.
+  * mapping): `readStream` text source → parse and seek → bounded reorder
+  * → paced sink. The source carries raw lines; `foreachBatch` parses and
+  * seeks each micro-batch with [[Parse.records]], the batch path's
+  * one-pass-per-line parse, so both paths share one event-time rule.
   *
   * The reference's 100k-event priority-queue reorder buffer
   * (JsonEventBufferedReader.java:39-47) becomes a [[ReorderBuffer]] fed by
@@ -123,15 +125,13 @@ object StreamingReplay {
     private final case class E(ms: Long, seq: Long, payload: Array[Byte])
   }
 
-  /** Streaming scheduled events. The disorder horizon is enforced by the
-    * sink-side [[ReorderBuffer]] (no `withWatermark` here: there is no
-    * stateful streaming operator downstream to consume one, the buffer
-    * computes its own horizon from max event time seen). The suffix
-    * anti-filter (R4) is applied via input_file_name — readStream has no
+  /** The input lines as a stream: the `text` source with the suffix
+    * anti-filter (R4) applied via input_file_name — readStream has no
     * file-list form, and pathGlobFilter is positive-only — and unreadable
-    * objects are skipped (R5) like the batch path. */
-  def stream(spark: SparkSession, cfg: ReplayConfig,
-      maxFilesPerTrigger: Int = 16): DataFrame = {
+    * objects skipped (R5) like the batch path. Each micro-batch is parsed
+    * by [[Parse.records]], as the batch path's scan is. */
+  private def lines(spark: SparkSession, cfg: ReplayConfig,
+      maxFilesPerTrigger: Int): DataFrame = {
     FramedLz4Codec.register(spark.sparkContext.hadoopConfiguration)
     // Suffix anti-filter semantics match the batch path (Source.listFiles):
     // the DECODED full path, like the reference's key.endsWith.
@@ -143,12 +143,10 @@ object StreamingReplay {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .option("ignoreCorruptFiles", "true")
       .text(cfg.inputPath)
-    val lines =
-      if (cfg.objectSuffixToSkip.isEmpty) raw
-      else raw.filter(
-        !(input_file_name().endsWith(cfg.objectSuffixToSkip) ||
-          url_decode(input_file_name()).endsWith(cfg.objectSuffixToSkip)))
-    Parse.seek(Parse.parsed(lines, cfg.timestampAttributeName), cfg.seek)
+    if (cfg.objectSuffixToSkip.isEmpty) raw
+    else raw.filter(
+      !(input_file_name().endsWith(cfg.objectSuffixToSkip) ||
+        url_decode(input_file_name()).endsWith(cfg.objectSuffixToSkip)))
   }
 
   /** Paced replay to a [[RecordSender]]. Blocks until the input is drained
@@ -175,6 +173,7 @@ object StreamingReplay {
       sleeper: Long => Unit = Thread.sleep,
       disorderToleranceMs: Long = 600000L,
       maxFilesPerTrigger: Int = 16): Long = {
+    Parse.requireAddressable(cfg.timestampAttributeName)
     val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
     val buffer = new ReorderBuffer(disorderToleranceMs, cfg.readerBufferSize)
     // anchor is stateful across micro-batches, like the reference's parser
@@ -202,7 +201,7 @@ object StreamingReplay {
       ReplayStats.shared.queueGauge = () => buffer.size
       ReplayStats.shared.queueCapacity = cfg.readerBufferSize
       ReplayStats.shared.forcedGauge = () => buffer.forceReleasedCount
-      val query = stream(spark, cfg, maxFilesPerTrigger)
+      val query = lines(spark, cfg, maxFilesPerTrigger)
         .writeStream
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -215,7 +214,7 @@ object StreamingReplay {
           // tie-break is unchanged, and the buffer's capacity still releases
           // mid-batch on overflow.
           val sc = spark.sparkContext
-          val rdd = Parse.records(batch)
+          val rdd = Parse.records(batch, cfg.timestampAttributeName, cfg.seek)
           def collect(p: Int): FutureAction[Array[(Long, Array[Byte])]] = {
             var got: Array[(Long, Array[Byte])] = null
             sc.submitJob(rdd, (it: Iterator[(Long, Array[Byte])]) => it.toArray,

@@ -223,6 +223,120 @@ class PropertySpec extends SparkSpec {
     }, n = 50)
   }
 
+  test("replay event time and payload equal try_to_timestamp(get_json_object) on generated lines, in UTC and America/New_York") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.replay.EventTime
+    import spark.implicits._
+    // lines are built as strings of chars 0x00-0xFF, one char per byte
+    // (ISO-8859-1), so invalid UTF-8 and raw multi-byte sequences fit
+    def bytes(line: String): Array[Byte] = line.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    val bs = "\\"
+    val times: Gen[String] = Gen.oneOf(
+      Gen.oneOf("2024-01-01T00:00:00Z", "2024-01-01T00:00:00", "2024-03-10T02:30:00",
+        "2024-11-03T01:30:00", "2024-01-01T00:00:00+05:30", "2024-01-01T00:00:00.1234567Z",
+        "2024-01-01T00:00:00.123456-08:00", "2024-01-01T00:00:00.0000005Z", "2024-01-01",
+        "2024-01-01 12:34:56", " 2024-01-01T00:00:00Z ", "2024-13-01T00:00:00Z", "", "x",
+        "1582-10-10T00:00:00Z", "0001-01-01T00:00:00Z", "+10000-01-01T00:00:00Z",
+        "2024-01-01T00:00:00 UTC", "2024-01-01T00:00:00.999999999Z", "2024-01-01T24:00:00Z",
+        s"2024-01-01T00:00:00${bs}u005A", s"2024-01-01T00:00:00Z${bs}n", "2024",
+        "2024-01-01T00:00:00Ã©"),
+      for {
+        y <- Gen.choose(1900, 2100); mo <- Gen.choose(1, 12); d <- Gen.choose(1, 28)
+        h <- Gen.choose(0, 23); mi <- Gen.choose(0, 59); sec <- Gen.choose(0, 59)
+        sep <- Gen.oneOf("T", " ")
+        frac <- Gen.oneOf("", ".5", ".123", ".123456", ".1234567", ".000001")
+        zone <- Gen.oneOf("", "Z", "+01:00", "-05:00", "+0530", " America/New_York")
+      } yield f"$y%04d-$mo%02d-$d%02d$sep$h%02d:$mi%02d:$sec%02d$frac$zone")
+    def quoted(t: String): Gen[String] = Gen.oneOf("\"", "'").map(q => q + t + q)
+    def value(name: String, depth: Int): Gen[String] = Gen.frequency(
+      8 -> times.flatMap(quoted),
+      2 -> Gen.oneOf("123", "-1.5e3", "0", "true", "false", "null", "1704067200"),
+      1 -> times.map(t => s"""["$t"]"""),
+      1 -> (if (depth > 0) obj(name, depth - 1) else Gen.const("{}")))
+    def key(name: String): Gen[String] = Gen.frequency(
+      6 -> Gen.const(name),
+      3 -> Gen.oneOf("id", "x", name + "2", name.toUpperCase, name.take(1)),
+      1 -> Gen.const(f"$bs%su${name.head.toInt}%04x${name.tail}"))
+    def field(name: String, depth: Int): Gen[String] = for {
+      k <- key(name); kq <- quoted(k); ws <- Gen.oneOf("", " ", "\t"); v <- value(name, depth)
+    } yield s"$kq$ws:$ws$v"
+    def obj(name: String, depth: Int): Gen[String] = for {
+      n <- Gen.choose(0, 4); fs <- Gen.listOfN(n, field(name, depth))
+    } yield fs.mkString("{", ",", "}")
+    val special = Seq("\u0000", "\u0001", "\t", "\u001F", "\u007F", "ÿ", "Ã", "\u0080",
+      "ð\u009F\u0098\u0080", "Ã©", "{", "}", "[", "]", ":", ",", "\"", "'", bs, " ")
+    def mutate(line: String): Gen[String] = Gen.frequency(
+      10 -> Gen.const(line),
+      1 -> Gen.choose(0, line.length).map(line.take), // malformed tail
+      1 -> Gen.oneOf("x", "}", ",{", " ", "\u0000").map(line + _), // trailing garbage
+      1 -> Gen.oneOf("", " ", "   ", "\t"), // empty or whitespace-only
+      1 -> Gen.const("ï»¿" + line), // byte-order mark
+      3 -> (for { i <- Gen.choose(0, line.length); b <- Gen.oneOf(special) }
+        yield line.patch(i, b, 0)),
+      2 -> (for { i <- Gen.choose(0, line.length); b <- Gen.oneOf(special) }
+        yield line.patch(i, b, 1)))
+    def lines(name: String): Gen[String] = obj(name, 2).flatMap(mutate).flatMap(mutate)
+    // lines the byte parser reads differently from get_json_object's
+    // Reader parser, or whose first match is not a time string
+    val fixed = Seq(
+      "{'x':'a\u0001b','ts':'2024-01-01T00:00:00Z'}", // byte parser rejects, Reader accepts
+      """{"ts":null,"ts":"2024-01-01T00:00:00Z"}""",
+      """{"ts":"2024-01-01T00:00:00Z","ts":"2025-01-01T00:00:00Z"}""",
+      """{"a":{"ts":"2024-01-01T00:00:00Z"},"b":["ts"]}""",
+      s"""{"t${bs}u0073":"2024-01-01T00:00:00Z"}""",
+      """{"ts":"2024-01-01T00:00:00Z"} trailing""",
+      """{"ts":"2024-01-01T00:00:00Z","x":}""",
+      """{"ts":1704067200}""", """{"ts":{"t":1}}""", """{"ts":true}""", "", " ",
+      "ï»¿{\"ts\":\"2024-01-01T00:00:00Z\"}",
+      "{\"ts\":\"2024-01-01T00:00:00Z\",\"s\":\"ð\u009F\u0098\u0080ÿ\u0000\"}")
+
+    /** Lines whose reader result differs from Spark's. */
+    def differences(name: String, ls: Seq[String]): Seq[String] = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(ls.map(l => Row(bytes(l))), 2),
+        StructType(Seq(StructField("bin", BinaryType))))
+        .select(col("bin").cast("string").as("value"))
+      val ts = try_to_timestamp(get_json_object(col("value"), s"$$['$name']"))
+      val want = df.select(unix_micros(ts), unix_millis(ts)).collect()
+        .map(r => if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))))
+      val reader = EventTime(df, name).reader()
+      ls.zip(want).flatMap { case (l, w) =>
+        val v = UTF8String.fromBytes(bytes(l))
+        val us = Option(reader.timestamp(v)).map(_.asInstanceOf[Long])
+        val rec = Option(reader.record(v, Long.MinValue))
+        val payload = (new String(bytes(l), UTF_8) + "\n").getBytes(UTF_8)
+        if (us == w.map(_._1) && rec.map(_._1) == w.map(_._2) &&
+            rec.forall(_._2.sameElements(payload))) None
+        else Some(s"${l.map(c => f"${c.toInt}%02x").mkString(" ")}: want $w, got $us $rec")
+      }
+    }
+
+    val gen = for {
+      name <- Gen.oneOf("ts", "a.b")
+      ls <- Gen.listOfN(200, lines(name))
+    } yield (name, ls)
+    val zone = "spark.sql.session.timeZone"
+    try {
+      for (tz <- Seq("UTC", "America/New_York")) {
+        spark.conf.set(zone, tz)
+        assert(differences("ts", fixed).isEmpty, tz)
+        val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100)
+          .withInitialSeed(if (tz == "UTC") 17L else 23L),
+          forAll(gen) { case (name, ls) =>
+            val d = differences(name, ls)
+            Prop(d.isEmpty) :| s"$tz, $name: ${d.take(3).mkString("; ")}"
+          })
+        assert(r.passed, r.status.toString)
+      }
+      // the pinned single-quote line has a time only the Reader parser finds
+      val reader = EventTime(Seq("").toDF("value"), "ts").reader()
+      assert(reader.timestamp(UTF8String.fromBytes(bytes(fixed.head))) == 1704067200000000L)
+    } finally spark.conf.set(zone, "UTC")
+  }
+
   test("connected components matches a union-find model on random graphs") {
     import spark.implicits._
     val gen = for {

@@ -110,6 +110,52 @@ class ReplayE2ESpec extends SparkSpec {
     assert(ids(CollectingSender.payloads) == Seq(3, 4, 5, 6))
   }
 
+  test("streaming seek filters exactly at the boundary (R7)") {
+    val cfg = ReplayConfig(inputPath = writeFixture(), speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1,
+      seek = Some(java.time.Instant.parse("2024-01-01T00:02:00Z")))
+    CollectingSender.clear()
+    val sent = StreamingReplay.run(spark, cfg, new CollectingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ())
+    assert(sent == 4)
+    assert(ids(CollectingSender.payloads) == Seq(3, 4, 5, 6))
+  }
+
+  test("seek keeps an event exactly at the seek time and drops one 1 µs before it, on both paths") {
+    val dir = Files.createTempDirectory("replay_seek_us")
+    Files.write(dir.resolve("events.jsonl"), Seq(
+      """{"id":1,"dropoff_datetime":"2024-01-01T00:01:59.999999Z"}""",
+      """{"id":2,"dropoff_datetime":"2024-01-01T00:02:00Z"}""",
+      """{"id":3,"dropoff_datetime":"2024-01-01T00:02:00.000001Z"}""",
+      """{"id":4,"dropoff_datetime":"2024-01-01T00:01:59.9999995Z"}""").mkString("\n").getBytes(UTF_8))
+    // id 4 truncates to 1 µs before the seek time, as try_to_timestamp does
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 1,
+      seek = Some(java.time.Instant.parse("2024-01-01T00:02:00Z")))
+    for (run <- Seq[RecordSender => Long](
+        s => ReplayJob.run(spark, cfg, s, nowMs = () => Long.MaxValue, sleeper = _ => ()),
+        s => StreamingReplay.run(spark, cfg, s, nowMs = () => Long.MaxValue, sleeper = _ => ()))) {
+      CollectingSender.clear()
+      assert(run(new CollectingSender()) == 2)
+      assert(ids(CollectingSender.payloads) == Seq(2, 3))
+    }
+  }
+
+  test("both replay paths reject an unaddressable attribute name before any job runs") {
+    val dir = writeFixture()
+    for (bad <- Seq("it's", "a\"b", "a\\b", "drop?off")) {
+      val cfg = ReplayConfig(inputPath = dir, timestampAttributeName = bad,
+        speedupFactor = 60000L, ingestionStartMs = Some(0L), senderParallelism = 1)
+      for (run <- Seq[() => Long](
+          () => ReplayJob.run(spark, cfg, new CollectingSender()),
+          () => StreamingReplay.run(spark, cfg, new CollectingSender()))) {
+        val (ex, jobs) = withJobCount(intercept[IllegalArgumentException](run()))
+        assert(ex.getMessage.contains("cannot address"))
+        assert(jobs == 0, s"$jobs Spark jobs ran before the name check")
+      }
+    }
+  }
+
   /** Runs `body` and returns its result with the number of Spark jobs it
     * submitted. Jobs are counted by a job group set on this thread, so
     * jobs from other threads never count. */
