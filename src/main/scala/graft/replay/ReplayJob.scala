@@ -2,11 +2,11 @@ package graft.replay
 
 import java.io.{DataInputStream, DataOutputStream, InputStream, OutputStream}
 import java.nio.ByteBuffer
-import org.apache.spark.RangePartitioner
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.ShuffledRDD
 import org.apache.spark.serializer.{DeserializationStream, SerializationStream, Serializer, SerializerInstance}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.reflect.ClassTag
 
 /** The whole replay pipeline, wired like RePlayer.main (SURVEY.md §3.1):
@@ -29,32 +29,40 @@ object ReplayJob {
 
   /** Run the replay: pace each event to its simulated ingestion time and
     * push through the sender in requests of ≤500 records and ≤5 MiB.
-    * Sender parallelism = sink partitions (reference: 4 sender threads,
-    * RePlayer.java:28).
+    * Sender parallelism = sink partitions, called lanes here (reference: 4
+    * sender threads, RePlayer.java:28).
     *
-    * A pass is three Spark jobs:
-    *   1. scan and decode the `text` source, then parse and seek each
-    *      line in one pass ([[Parse.records]]: one Jackson byte-parser pass
-    *      per line), kept as `(event ms, payload bytes)` rows, persisted
-    *      `MEMORY_AND_DISK` and folded to the schedule anchor (min event
-    *      time) and the row count;
-    *   2. the range partitioner's sample of event times, over the cache
-    *      (none with one sender; a second sample job re-samples an input
-    *      partition holding far more rows than the others);
-    *   3. the range shuffle on event ms, sorted within each partition, and
-    *      the paced sink (one job, two stages). The shuffle is what
-    *      `repartitionAndSortWithinPartitions` builds, but its records go
-    *      through [[RecordShuffleSerializer]], not Kryo.
-    * The cache is what keeps the whole input from being listed, decoded
-    * and parsed once per job; it is dropped when the pass ends, also on
-    * failure.
+    * A pass is one Spark job of two stages:
+    *   1. scan and decode the `text` source, parse and seek each line in
+    *      one pass ([[Parse.records]]: one Jackson byte-parser pass per
+    *      line), and write the shuffle of `(event ms, payload bytes)`
+    *      records, after which each task appends its anchor records;
+    *   2. per lane, sort the records on event ms and run the paced sink.
+    * The shuffle is what `repartitionAndSortWithinPartitions` builds, but
+    * its records go through [[RecordShuffleSerializer]], not Kryo. Nothing
+    * is persisted.
+    *
+    * Lanes: [[LanePartitioner]] sends a record to a well-mixed hash of its
+    * event ms modulo the lane count, so equal event times never split
+    * across lanes, and every lane holds an interleaved share of the whole
+    * time span. Under pacing all lanes send at once, as the reference's
+    * sender threads drain one queue together (KinesisProducer.java:104-130).
+    *
+    * Anchor: the schedule is anchored at the minimum event time of the
+    * whole input. Each map task tracks its own minimum and, after its last
+    * record, appends one anchor record per lane with the key
+    * [[LanePartitioner.anchorKey]] and its minimum as an 8-byte payload.
+    * Anchor keys lie below every event ms, so they sort first in their
+    * lane, and each sink task takes the minimum over its leading anchor
+    * records as the anchor before it replays the rest. Every non-empty map
+    * task reaches every lane, so each lane sees the global minimum; a task
+    * retry rebuilds the same anchors. Anchor records are never sent.
     *
     * Event-time order is the schedule order: `Schedule.ingestionMs` is
     * non-decreasing in event time, so sorting on event ms alone yields
     * the `(ingestion_ms, event ms)` order. Each sink task is one
     * [[Sink.replay]], which computes its records' due times as they
-    * arrive, as the streaming path's tasks do. Each task replays a
-    * contiguous slice of event time, in event-time order.
+    * arrive, as the streaming path's tasks do.
     *
     * Pacing sleeps inside sink tasks; with senderParallelism ≪ cores this
     * holds few cores, and at high speedup the sleeps vanish — the
@@ -65,30 +73,69 @@ object ReplayJob {
       sleeper: Long => Unit = Thread.sleep): Long = {
     Parse.requireAddressable(cfg.timestampAttributeName)
     val startMs = cfg.ingestionStartMs.getOrElse(System.currentTimeMillis())
-    val rows = Parse.records(Source.jsonLines(spark, cfg), cfg.timestampAttributeName, cfg.seek)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (firstMs, count) = rows.aggregate((Long.MaxValue, 0L))(
-        (acc, r) => (math.min(acc._1, r._1), acc._2 + 1),
-        (a, b) => (math.min(a._1, b._1), a._2 + b._2))
-      if (count == 0) 0L else {
-        val sentAcc = spark.sparkContext.longAccumulator("records_sent")
-        val retryAcc = spark.sparkContext.longAccumulator("send_retries")
-        val statsFreq = cfg.statisticsFrequencyMillis
-        val speedup = cfg.speedupFactor
-        new ShuffledRDD[Long, Array[Byte], Array[Byte]](rows,
-            new RangePartitioner(cfg.senderParallelism, rows))
-          .setKeyOrdering(Ordering.Long)
-          .setSerializer(RecordShuffleSerializer)
-          .foreachPartition { it =>
-            val (sent, retries) = Sink.replay(it, firstMs, startMs, speedup, statsFreq,
-              sender, nowMs, sleeper)
-            sentAcc.add(sent)
-            retryAcc.add(retries)
-          }
-        sentAcc.value
+    val lanes = new LanePartitioner(cfg.senderParallelism)
+    val records = Parse.records(Source.jsonLines(spark, cfg), cfg.timestampAttributeName, cfg.seek)
+      .mapPartitions(lanes.withAnchors)
+    val sentAcc = spark.sparkContext.longAccumulator("records_sent")
+    val retryAcc = spark.sparkContext.longAccumulator("send_retries")
+    val statsFreq = cfg.statisticsFrequencyMillis
+    val speedup = cfg.speedupFactor
+    new ShuffledRDD[Long, Array[Byte], Array[Byte]](records, lanes)
+      .setKeyOrdering(Ordering.Long)
+      .setSerializer(RecordShuffleSerializer)
+      .foreachPartition { it =>
+        val lane = it.buffered
+        val firstMs = LanePartitioner.takeAnchors(lane)
+        val (sent, retries) = Sink.replay(lane, firstMs, startMs, speedup, statsFreq,
+          sender, nowMs, sleeper)
+        sentAcc.add(sent)
+        retryAcc.add(retries)
       }
-    } finally rows.unpersist()
+    sentAcc.value
+  }
+}
+
+/** The batch path's lanes: an event goes to `mix(event ms) mod lanes`, and
+  * lane `l`'s anchor key to lane `l`. `mix` is Murmur3 of the whole long,
+  * with the seed of Spark's `hash`. `Long.hashCode mod 4` would send every
+  * second-aligned event time of a span under 49 days to one lane: 1000 is
+  * a multiple of 8, and the high word barely changes. */
+private[replay] final class LanePartitioner(lanes: Int) extends Partitioner {
+  override def numPartitions: Int = lanes
+  override def getPartition(key: Any): Int = key.asInstanceOf[Long] match {
+    case ms if LanePartitioner.isAnchor(ms) => (ms - Long.MinValue).toInt
+    case ms => Math.floorMod(Murmur3_x86_32.hashLong(ms, 42), lanes)
+  }
+
+  /** The records of one map task, then, if there were any, one anchor
+    * record per lane carrying the task's minimum event ms. */
+  def withAnchors(records: Iterator[(Long, Array[Byte])]): Iterator[(Long, Array[Byte])] = {
+    var minMs = Long.MaxValue
+    // `++` takes its argument by name: the anchors are built once the
+    // records are drained
+    records.map { r => if (r._1 < minMs) minMs = r._1; r } ++ {
+      if (minMs == Long.MaxValue) Iterator.empty
+      else {
+        val payload = ByteBuffer.allocate(8).putLong(minMs).array()
+        Iterator.tabulate(lanes)(l => (LanePartitioner.anchorKey(l), payload))
+      }
+    }
+  }
+}
+
+private[replay] object LanePartitioner {
+  /** Event ms are floors of event microseconds, so at least
+    * `Long.MinValue / 1000 - 1`: far above every anchor key. */
+  def anchorKey(lane: Int): Long = Long.MinValue + lane
+  def isAnchor(key: Long): Boolean = key <= Long.MinValue + Int.MaxValue
+
+  /** Takes the anchor records at the head of a sorted lane and returns the
+    * least minimum they carry: the whole input's minimum event ms. */
+  def takeAnchors(lane: BufferedIterator[(Long, Array[Byte])]): Long = {
+    var firstMs = Long.MaxValue
+    while (lane.hasNext && isAnchor(lane.head._1))
+      firstMs = math.min(firstMs, ByteBuffer.wrap(lane.next()._2).getLong)
+    firstMs
   }
 }
 

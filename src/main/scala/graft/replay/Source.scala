@@ -36,14 +36,18 @@ object Source {
   def listFiles(spark: SparkSession, path: String, suffixToSkip: String): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile &&
+    // plain listStatus, not listFiles: listFiles builds a LocatedFileStatus
+    // per file, and on the local filesystem without native Hadoop each one
+    // reads its permissions by forking a shell command. listStatus of a
+    // file lists the file itself, as listFiles does.
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else if (f.isFile &&
           !(suffixToSkip.nonEmpty && f.getPath.toUri.getPath.endsWith(suffixToSkip)))
         out += f.getPath.toString
     }
+    walk(p)
     out.sorted.toSeq
   }
 

@@ -32,8 +32,9 @@ import scala.concurrent.duration.Duration
   * stream, N parallel sender lanes pulling contiguous time slices. Pacing
   * rate-limits replay to the simulated clock, so the buffer — not the
   * cluster — is never the throughput bound. The horizontally-scalable form
-  * of replay is the batch path ([[ReplayJob]]): a range-partitioned total
-  * sort with per-partition pacing and no driver-side state.
+  * of replay is the batch path ([[ReplayJob]]): one shuffle into lanes
+  * hashed on event time, each sorted and paced in its own task, with no
+  * driver-side state.
   *
   * Driver memory: each micro-batch is collected as [[Parse.records]],
   * `(event ms, payload bytes)`, the batch path's record format, one

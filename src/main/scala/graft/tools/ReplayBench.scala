@@ -88,8 +88,9 @@ object ReplayBench {
       senderParallelism = 32)
     def onePass(): Double = {
       val t0 = System.nanoTime()
-      val sent = ReplayJob.run(spark, cfg, new DiscardingSender(),
-        nowMs = () => Long.MaxValue / 2)
+      // every record is due at 0 at this speedup: a clock pinned at 0
+      // never sleeps and reports a lag of 0
+      val sent = ReplayJob.run(spark, cfg, new DiscardingSender(), nowMs = () => 0L)
       require(sent == n, s"pipeline dropped rows: sent $sent of $n")
       (System.nanoTime() - t0) / 1e9
     }

@@ -208,7 +208,7 @@ class ReplayE2ESpec extends SparkSpec {
   private def eventMs(payload: String): Long = java.time.Instant.parse(
     """"dropoff_datetime":"([^"]+)"""".r.findFirstMatchIn(payload).get.group(1)).toEpochMilli
 
-  test("batch replay is at most 3 Spark jobs and leaves no cache behind") {
+  test("batch replay is one Spark job and leaves no cache behind") {
     val sc = spark.sparkContext
     val (dir, expected) = laneFixture(files = 6, perFile = 50, distinctTimes = 40, seed = 11)
     val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
@@ -220,8 +220,8 @@ class ReplayE2ESpec extends SparkSpec {
         nowMs = () => Long.MaxValue, sleeper = _ => ())))
     assert(sent == expected.size)
     assert(CollectingSender.payloads.sorted == expected.sorted)
-    // scan+parse+anchor, range sample, shuffle+sink
-    assert(jobs <= 3, s"$jobs Spark jobs for one replay pass")
+    // scan+parse+shuffle write, then sort+sink
+    assert(jobs <= 1, s"$jobs Spark jobs for one replay pass")
     assert(sc.getPersistentRDDs.isEmpty, s"left persisted: ${sc.getPersistentRDDs}")
     assert(spark.sharedState.cacheManager.isEmpty)
     // no DataFrame cache while the sink runs either
@@ -265,7 +265,7 @@ class ReplayE2ESpec extends SparkSpec {
       val (sent, jobs) = withJobCount(ReplayJob.run(spark, cfg, new CollectingSender(),
         nowMs = () => Long.MaxValue, sleeper = _ => ()))
       assert(sent == 0 && CollectingSender.payloads.isEmpty, cfg.inputPath)
-      assert(jobs <= 1, s"$jobs jobs: nothing to partition after the anchor fold")
+      assert(jobs <= 1, s"$jobs Spark jobs for a replay pass with no events")
       assert(sc.getPersistentRDDs.isEmpty, s"left persisted: ${sc.getPersistentRDDs}")
     }
   }
@@ -283,8 +283,8 @@ class ReplayE2ESpec extends SparkSpec {
   }
 
   test("batch replay over 3 lanes delivers every good line once, each lane in event-time order") {
-    // 8 distinct event times over 600 events: every range boundary falls
-    // on a run of equal event times
+    // 8 distinct event times over 600 events: long runs of equal event
+    // times, each of which must stay on one lane
     val (dir, expected) = laneFixture(files = 5, perFile = 120, distinctTimes = 8, seed = 23)
     val cfg = ReplayConfig(inputPath = dir, speedupFactor = 60000L,
       ingestionStartMs = Some(0L), senderParallelism = 3)
@@ -299,10 +299,66 @@ class ReplayE2ESpec extends SparkSpec {
     lanes.foreach { case (lane, ms) =>
       assert(ms == ms.sorted, s"lane $lane out of event-time order")
     }
-    // lanes are contiguous, disjoint slices of event time: equal event
-    // times never straddle two lanes
-    val spans = lanes.toSeq.sortBy(_._1).map { case (_, ms) => (ms.head, ms.last) }
-    spans.zip(spans.drop(1)).foreach { case ((_, hi), (lo, _)) => assert(hi < lo, s"$spans") }
+    // lanes are hashed on event ms: equal event times never straddle two
+    // lanes, and each lane holds an interleaved share of the time span
+    got.groupBy(r => eventMs(r._2)).foreach { case (ms, rs) =>
+      assert(rs.map(_._1).distinct.size == 1, s"event ms $ms on lanes ${rs.map(_._1).distinct}")
+    }
+    val spans = lanes.values.map(ms => (ms.head, ms.last)).toSeq
+    assert(spans.combinations(2).exists { case Seq((lo1, hi1), (lo2, hi2)) => lo1 < hi2 && lo2 < hi1 },
+      s"lane spans do not overlap: $spans")
+  }
+
+  test("every batch lane anchors its schedule on the global minimum event time") {
+    // the earliest event is unique and sits in the first file, so one lane
+    // holds it; the other lanes learn it only from the anchor records
+    val dir = Files.createTempDirectory("replay_anchor")
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    val lines = (0 until 4).map { k =>
+      val offsets = (if (k == 0) Seq(0) else Nil) ++ (1 to 60).map(i => 4 * i + k)
+      val rows = offsets.map(s =>
+        s"""{"id":${k * 1000 + s},"dropoff_datetime":"${base.plusSeconds(s)}"}""")
+      Files.write(dir.resolve(s"part-$k.jsonl"), rows.mkString("\n").getBytes(UTF_8))
+      rows
+    }.flatten
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 1L,
+      ingestionStartMs = Some(0L), senderParallelism = 4)
+    LaneRecordingSender.received.clear()
+    SleepRecorder.clear()
+    val sent = onePartitionPerFile(ReplayJob.run(spark, cfg, new LaneRecordingSender(),
+      nowMs = () => 0L, sleeper = SleepRecorder.record))
+    assert(sent == lines.size)
+    val got = LaneRecordingSender.received.toArray(Array.empty[(Int, String)]).toSeq
+    val firstMs = base.toEpochMilli
+    assert(got.map(_._1).distinct.size == 4, s"lanes used: ${got.map(_._1).distinct}")
+    assert(got.count(r => eventMs(r._2) == firstMs) == 1)
+    val due = lines.map(l => Schedule.ingestionMs(eventMs(l), firstMs, 0L, 1.0)).filter(_ > 0)
+    assert(SleepRecorder.all.sorted == due.sorted)
+  }
+
+  test("batch lanes split second-aligned event times evenly") {
+    // Long.hashCode mod 4 sends all of these to one lane
+    val dir = Files.createTempDirectory("replay_lane_balance")
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    (0 until 4).foreach { k =>
+      val rows = (0 until 1000).map { i =>
+        val s = k * 1000 + i
+        s"""{"id":$s,"dropoff_datetime":"${base.plusSeconds(s)}"}"""
+      }
+      Files.write(dir.resolve(s"part-$k.jsonl"), rows.mkString("\n").getBytes(UTF_8))
+    }
+    val cfg = ReplayConfig(inputPath = dir.toString, speedupFactor = 60000L,
+      ingestionStartMs = Some(0L), senderParallelism = 4)
+    LaneRecordingSender.received.clear()
+    val sent = ReplayJob.run(spark, cfg, new LaneRecordingSender(),
+      nowMs = () => Long.MaxValue, sleeper = _ => ())
+    assert(sent == 4000)
+    val perLane = LaneRecordingSender.received.toArray(Array.empty[(Int, String)]).toSeq
+      .groupBy(_._1).map { case (lane, rs) => (lane, rs.size) }
+    assert(perLane.size == 4, s"$perLane")
+    perLane.foreach { case (lane, n) =>
+      assert(n >= 800 && n <= 1200, s"lane $lane holds $n of 4000 records: $perLane")
+    }
   }
 
   test("streaming replay with AvailableNow drains everything then stops (R14)") {
@@ -763,6 +819,36 @@ class ReplayE2ESpec extends SparkSpec {
     // an empty suffix skips NOTHING (endsWith("") is true of every path —
     // it must not mean "skip everything")
     assert(Source.listFiles(spark, dir.toString, "").size == 2)
+  }
+
+  test("listing walks the tree like Hadoop's recursive listFiles, suffix skip included") {
+    val dir = Files.createTempDirectory("replay_listing")
+    Files.createDirectories(dir.resolve("sub/deeper"))
+    Files.createDirectories(dir.resolve("empty"))
+    for (f <- Seq("b.jsonl", "a.jsonl", "sub/README.md", "sub/my notes.md",
+        "sub/c.jsonl", "sub/deeper/d.json.lz4", "sub/deeper/README.md"))
+      Files.write(dir.resolve(f), "{}".getBytes(UTF_8))
+    def hadoopListing(path: String, suffix: String): Seq[String] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.isFile && !(suffix.nonEmpty && f.getPath.toUri.getPath.endsWith(suffix)))
+          out += f.getPath.toString
+      }
+      out.result().sorted
+    }
+    for {
+      root <- Seq(dir.toString, dir.toUri.toString, dir.resolve("sub").toString,
+        dir.resolve("sub/deeper/d.json.lz4").toString)
+      suffix <- Seq("", "README.md", "sub/my notes.md", "deeper/d.json.lz4")
+    } {
+      val listed = Source.listFiles(spark, root, suffix)
+      assert(listed == hadoopListing(root, suffix), s"$root, suffix '$suffix'")
+    }
+    assert(Source.listFiles(spark, dir.toString, "README.md").map(_.split('/').last) ==
+      Seq("a.jsonl", "b.jsonl", "c.jsonl", "d.json.lz4", "my notes.md"))
   }
 
   test("block-format .lz4 (Hadoop Lz4Codec wire format) still decodes via the sniffing fallback") {
