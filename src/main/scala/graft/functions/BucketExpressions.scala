@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
@@ -15,9 +16,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * The fold is O(nBuckets) comparisons per row AND a depth-nBuckets
   * expression tree — the reason those operators capped nBuckets at 1024
   * (codegen/analyzer depth hazard). This expression is one O(log n)
-  * binary search per row with the boundary array held as a single
-  * reference object, so the per-row cost and the plan size are both
-  * independent of the bucket count. Equality with the fold is asserted in
+  * binary search per row with the boundary array held once on the
+  * expression (the object generated code calls [[compute]] on), so the
+  * per-row cost and the plan size are both independent of the bucket
+  * count. Equality with the fold is asserted in
   * BucketExprSpec (including ties: a value EQUAL to a boundary counts
   * only the strictly-smaller bounds, and NaN lands in the LAST bucket —
   * Spark SQL orders NaN above every double, unlike Java's `>`, so the
@@ -25,58 +27,42 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * which approxQuantile over non-NaN data guarantees).
   */
 case class BucketIndex(child: Expression, bounds: Seq[Double])
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   @transient private lazy val arr: Array[Double] = bounds.toArray
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case DoubleType =>
-        // binary search requires non-decreasing bounds (duplicates are
-        // fine — lower-bound counts strictly-smaller entries either way);
-        // an unsorted array would silently return wrong indices
-        val sorted = bounds.isEmpty ||
-          bounds.sliding(2).forall(p => p.length < 2 || p(0) <= p(1))
-        if (sorted)
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        else
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            "bucket_index bounds must be sorted ascending")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bucket_index expects a double column, got ${other.sql}")
-    }
-
+  def sqlName: String = "bucket_index"
+  protected def argTypes: Seq[DataType] = Seq(DoubleType)
   override def dataType: DataType = IntegerType
 
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Integer.valueOf(
-      BucketIndex.indexOf(arr, input.asInstanceOf[Double]))
+  // binary search requires non-decreasing bounds (duplicates are fine —
+  // lower-bound counts strictly-smaller entries either way); an unsorted
+  // array would silently return wrong indices
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case TypeCheckSuccess
+          if bounds.sliding(2).exists(p => p.length == 2 && !(p(0) <= p(1))) =>
+        TypeCheckFailure(s"$sqlName bounds must be sorted ascending")
+      case r => r
+    }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boundsRef = ctx.addReferenceObj("bounds", arr, "double[]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.BucketIndex.indexOf($boundsRef, $v);")
+  override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[Double])
+
+  /** Count of bounds strictly below `v` (bounds ascending): the insertion
+    * point of the first bound >= v. */
+  def compute(v: Double): Int = {
+    if (java.lang.Double.isNaN(v)) return arr.length // Spark: NaN > all
+    var lo = 0
+    var hi = arr.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (arr(mid) < v) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 
   override protected def withNewChildInternal(newChild: Expression): BucketIndex =
     copy(child = newChild)
-}
-
-object BucketIndex {
-  /** Count of bounds strictly below `v` (bounds ascending): the insertion
-    * point of the first bound >= v. Shared by eval and generated code. */
-  def indexOf(bounds: Array[Double], v: Double): Int = {
-    if (java.lang.Double.isNaN(v)) return bounds.length // Spark: NaN > all
-    var lo = 0
-    var hi = bounds.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (bounds(mid) < v) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
 }
 
 object RangeFunctions {

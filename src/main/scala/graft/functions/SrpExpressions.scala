@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -19,20 +18,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * (32 passes over every vector); this is one fused loop.
   */
 case class SrpBuckets(child: Expression, tables: Int, bits: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(tables >= 1 && bits >= 1 && bits <= 63)
+  def sqlName: String = "srp_buckets"
+  protected def argTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"srp_buckets expects array<float>, got ${other.sql}")
-    }
 
   // signs[t*bits + p][i], grown lazily to the observed dimensionality.
   // Published as ONE volatile write of an immutable (dims, table) pair:
@@ -74,9 +65,6 @@ case class SrpBuckets(child: Expression, tables: Int, bits: Int)
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
 
-  // public and monomorphic so generated code calls it directly on the
-  // child's ArrayData — no CodegenFallback row materialization in the
-  // bucketing scan (the LSH hot path)
   def compute(arr: ArrayData): GenericArrayData = {
     val dims = arr.numElements()
     val signs = signsFor(dims)
@@ -101,11 +89,6 @@ case class SrpBuckets(child: Expression, tables: Int, bits: Int)
       t += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("srpBuckets", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -1,70 +1,101 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+// Text kernels. Each expression here is evaluated by one kernel, its
+// `compute` method ([[Kernel]]): eval calls it and the generated code is
+// one call to it. The shingle, bigram and sha32 kernels take their
+// tokens, n-token grams and sha32 values from [[Tokens]], so the four
+// cannot tokenize or hash differently.
+
+/** The pieces the shingle, bigram and sha32 kernels share, each the
+  * one-pass form of a composed column pipeline. */
+private object Tokens {
+
+  /** `filter(split(lower(text), " "), _ != "")`: lowercase via UTF8String
+    * (the same collation-free lowering as `lower`), split on a single
+    * space (a tab is not a separator), empties dropped. */
+  def of(v: UTF8String): Array[String] = {
+    val parts = v.toLowerCase.toString.split(' ')
+    var n = 0
+    var i = 0
+    while (i < parts.length) {
+      if (!parts(i).isEmpty) { parts(n) = parts(i); n += 1 }
+      i += 1
+    }
+    if (n == parts.length) parts else java.util.Arrays.copyOf(parts, n)
+  }
+
+  /** Every `n`-token gram of `v` in position order, its tokens joined by
+    * one space (`array_join(slice(tk, i, n), " ")`); empty when `v` has
+    * fewer than `n` tokens. */
+  def grams(v: UTF8String, n: Int): Array[String] = {
+    val toks = of(v)
+    val m = toks.length - n + 1
+    if (m <= 0) return Array.empty[String]
+    val out = new Array[String](m)
+    val sb = new java.lang.StringBuilder(64)
+    var i = 0
+    while (i < m) {
+      sb.setLength(0)
+      sb.append(toks(i))
+      var j = 1
+      while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+      out(i) = sb.toString
+      i += 1
+    }
+    out
+  }
+
+  // one digest per task thread, not per row: getInstance is a provider
+  // lookup and an allocation, measurable across a 100 TB scan
+  private val sha256 = ThreadLocal.withInitial[MessageDigest](() =>
+    MessageDigest.getInstance("SHA-256"))
+
+  /** The portable 32-bit hash of `s`: the first 4 bytes of its SHA-256,
+    * big-endian unsigned — what `conv(substring(sha2(s, 256), 1, 8), 16,
+    * 10)` computes (the first 8 hex chars), and DuckDB replays with
+    * ascii() arithmetic. */
+  def sha32(s: String): Long = {
+    val d = sha256.get().digest(s.getBytes(StandardCharsets.UTF_8))
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+  }
+}
 
 /** Native n-gram shingle hasher (SURVEY.md §2B X26 hot path).
   *
   * Semantics are exactly the composed pipeline
   * `array_distinct(transform(...array_join(slice(filter(split(lower(text)," "),...)...)))`
-  * followed by `xxhash64(shingle)` — lowercase via UTF8String (same
-  * collation-free lowering as the `lower` function), tokens split on a
-  * single space with empties dropped, `n`-token shingles joined by one
-  * space, hashed with Spark's XXH64 at the default seed 42, distinct.
-  * One pass, no intermediate arrays or interpreted lambdas — the composed
-  * form evaluated 7 higher-order functions per row and dominated the
-  * dedup benchmarks.
+  * followed by `xxhash64(shingle)`: the [[Tokens]] grams, hashed with
+  * Spark's XXH64 at the default seed 42, distinct. One pass, no
+  * intermediate arrays or interpreted lambdas — the composed form
+  * evaluated 7 higher-order functions per row and dominated the dedup
+  * benchmarks.
   */
-case class ShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+case class ShingleHashes(child: Expression, n: Int) extends UnaryKernel {
 
   require(n >= 1, "shingle size must be >= 1")
+  def sqlName: String = "shingle_hashes"
+  protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _: org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"shingle_hashes expects a string column, got $other")
-    }
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
 
-  // public and monomorphic so the generated code calls it directly on the
-  // child's UTF8String — no CodegenFallback (which re-evaluates through
-  // the interpreted expression tree and forces input-row materialization
-  // inside an otherwise fully-codegen'd stage)
   def compute(v: UTF8String): GenericArrayData = {
-    val lowered = v.toLowerCase.toString
-    val parts = lowered.split(' ')
-    val toks = new java.util.ArrayList[String](parts.length)
+    val grams = Tokens.grams(v, n)
+    val seen = new java.util.LinkedHashSet[java.lang.Long](grams.length)
     var i = 0
-    while (i < parts.length) {
-      if (!parts(i).isEmpty) toks.add(parts(i))
-      i += 1
-    }
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.emptyLongArray)
-    val seen = new java.util.LinkedHashSet[java.lang.Long](m)
-    val sb = new java.lang.StringBuilder(64)
-    i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(i + j))
-        j += 1
-      }
-      val u = UTF8String.fromString(sb.toString)
+    while (i < grams.length) {
+      val u = UTF8String.fromString(grams(i))
       seen.add(XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes(), 42L))
       i += 1
     }
@@ -73,11 +104,6 @@ case class ShingleHashes(child: Expression, n: Int)
     var k = 0
     while (it.hasNext) { out(k) = it.next(); k += 1 }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleHashes", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -92,49 +118,16 @@ case class ShingleHashes(child: Expression, n: Int)
   * [[ShingleHashes]]'s distinct set). One pass, no interpreted
   * zip_with/filter/transform lambdas — bit-equality with the composed
   * form is asserted in TextExprSpec. */
-case class TokenBigrams(child: Expression)
-    extends UnaryExpression {
+case class TokenBigrams(child: Expression) extends UnaryKernel {
 
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.StringType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _: org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"token_bigrams expects a string column, got $other")
-    }
+  def sqlName: String = "token_bigrams"
+  protected def argTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
 
-  // see ShingleHashes.compute — the direct codegen call target
-  def compute(v: UTF8String): GenericArrayData = {
-    val lowered = v.toLowerCase.toString
-    val parts = lowered.split(' ')
-    val toks = new java.util.ArrayList[String](parts.length)
-    var i = 0
-    while (i < parts.length) {
-      if (!parts(i).isEmpty) toks.add(parts(i))
-      i += 1
-    }
-    val m = toks.size - 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
-    val out = new Array[Any](m)
-    i = 0
-    while (i < m) {
-      out(i) = UTF8String.fromString(toks.get(i) + " " + toks.get(i + 1))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenBigrams", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  def compute(v: UTF8String): GenericArrayData =
+    new GenericArrayData(Tokens.grams(v, 2).map[Any](UTF8String.fromString))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -152,10 +145,7 @@ object MinHashParams {
 
 /** Native single-pass sha32 MinHash signature (X26 fixture hot path):
   * per document, the k-permutation MinHash signature over the distinct
-  * `n`-token shingles, with the PORTABLE base hash — the first 8 hex
-  * chars of sha256(shingle) parsed as an integer (what `conv(substring(
-  * sha2(sh,256),1,8),16,10)` computes, i.e. the first 4 digest bytes
-  * big-endian unsigned; DuckDB replays it with ascii() arithmetic).
+  * `n`-token shingles, with the PORTABLE base hash [[Tokens.sha32]].
   *
   * Bit-identical to the composed pipeline
   * `signatures(shingleRows.select(doc_id, sha32(sh)))` (asserted in
@@ -167,73 +157,34 @@ object MinHashParams {
   * shingles; the caller filters them out, matching the composed form
   * where such docs simply have no rows). */
 case class Sha32MinHashSigs(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
 
   require(n >= 1, "shingle size must be >= 1")
   require(k >= 1, "signature size must be >= 1")
+  def sqlName: String = "sha32_minhash_sigs"
+  protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _: org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sha32_minhash_sigs expects a string column, got $other")
-    }
 
   @transient private lazy val as: Array[Long] =
     Array.tabulate(k)(MinHashParams.aCoef)
   @transient private lazy val bs: Array[Long] =
     Array.tabulate(k)(MinHashParams.bCoef)
 
-  // one digest instance per task thread, not per ROW — getInstance is a
-  // provider lookup + allocation, measurable across a 100 TB scan
-  @transient private lazy val mdLocal =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("SHA-256"))
-
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
 
-  // see ShingleHashes.compute — the direct codegen call target
   def compute(v: UTF8String): GenericArrayData = {
-    val lowered = v.toLowerCase.toString
-    val parts = lowered.split(' ')
-    val toks = new java.util.ArrayList[String](parts.length)
-    var i = 0
-    while (i < parts.length) {
-      if (!parts(i).isEmpty) toks.add(parts(i))
-      i += 1
-    }
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.emptyLongArray)
+    val grams = Tokens.grams(v, n)
+    if (grams.isEmpty) return new GenericArrayData(Array.emptyLongArray)
     val P = MinHashParams.P
     val sigs = new Array[Long](k)
     java.util.Arrays.fill(sigs, Long.MaxValue)
     // distinct-ness: duplicate shingles produce identical h_i values, so
     // folding every occurrence into the min EQUALS folding the distinct
     // set — no dedup structure needed
-    val md = mdLocal.get()
-    val sb = new java.lang.StringBuilder(64)
-    i = 0
-    while (i < m) {
-      sb.setLength(0)
+    var i = 0
+    while (i < grams.length) {
+      val base = Tokens.sha32(grams(i)) & 0x7fffffffL // pmod(shh, 2^31)
       var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(i + j))
-        j += 1
-      }
-      md.reset()
-      val digest = md.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // first 8 hex chars of the digest = first 4 bytes, big-endian,
-      // unsigned — exactly conv(substring(sha2(sh,256),1,8),16,10)
-      val shh = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      val base = shh & 0x7fffffffL // pmod(shh, 2^31) for non-negative shh
-      j = 0
       while (j < k) {
         val h = (as(j) * base + bs(j)) % P
         if (h < sigs(j)) sigs(j) = h
@@ -242,11 +193,6 @@ case class Sha32MinHashSigs(child: Expression, n: Int, k: Int)
       i += 1
     }
     new GenericArrayData(sigs)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sha32MinHashSigs", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -259,74 +205,24 @@ case class Sha32MinHashSigs(child: Expression, n: Int, k: Int)
   * `transform(sequence(1, size(tk) − k + 1), i ->
   * sha32(array_join(slice(tk, i, k), " ")))` over
   * `filter(split(lower(text), " "), _ != "")` — every position's
-  * k-token gram hashed to the first-4-bytes-of-SHA-256 portable value
-  * (identical to `conv(substring(sha2(g, 256), 1, 8), 16, 10)`), WITH
+  * k-token gram hashed to the portable [[Tokens.sha32]] value, WITH
   * multiplicity and in position order (array index = 1-based k-gram
   * position — [[ShingleHashes]] is the DISTINCT/xxhash64 sibling for
   * Jaccard, this keeps what winnowing windows and span offsets need).
-  * Fewer than k tokens → empty array. One pass, one thread-local
-  * digest; the composed form re-tokenized and re-joined through five
-  * interpreted higher-order functions per position. */
-case class Sha32KgramHashes(child: Expression, k: Int)
-    extends UnaryExpression {
+  * Fewer than k tokens → empty array. One pass; the composed form
+  * re-tokenized and re-joined through five interpreted higher-order
+  * functions per position. */
+case class Sha32KgramHashes(child: Expression, k: Int) extends UnaryKernel {
 
   require(k >= 1, "k-gram size must be >= 1")
+  def sqlName: String = "sha32_kgrams"
+  protected def argTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _: org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sha32_kgrams expects a string column, got $other")
-    }
-
-  @transient private lazy val mdLocal =
-    ThreadLocal.withInitial[java.security.MessageDigest](() =>
-      java.security.MessageDigest.getInstance("SHA-256"))
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
 
-  // see ShingleHashes.compute — the direct codegen call target
-  def compute(v: UTF8String): GenericArrayData = {
-    val lowered = v.toLowerCase.toString
-    val parts = lowered.split(' ')
-    val toks = new java.util.ArrayList[String](parts.length)
-    var i = 0
-    while (i < parts.length) {
-      if (!parts(i).isEmpty) toks.add(parts(i))
-      i += 1
-    }
-    val m = toks.size - k + 1
-    if (m <= 0) return new GenericArrayData(Array.emptyLongArray)
-    val md = mdLocal.get()
-    val sb = new java.lang.StringBuilder(64)
-    val out = new Array[Long](m)
-    i = 0
-    while (i < m) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(i + j))
-        j += 1
-      }
-      md.reset()
-      val digest = md.digest(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out(i) = ((digest(0) & 0xffL) << 24) | ((digest(1) & 0xffL) << 16) |
-        ((digest(2) & 0xffL) << 8) | (digest(3) & 0xffL)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sha32KgramHashes", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
+  def compute(v: UTF8String): GenericArrayData =
+    new GenericArrayData(Tokens.grams(v, k).map(Tokens.sha32))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -347,28 +243,16 @@ case class Sha32KgramHashes(child: Expression, k: Int)
   * the RIGHTMOST of any tied minimum at the front, so the emitted
   * positions are bit-identical to the fold's. Empty arrays yield empty
   * (the callers filter size ≥ k upstream). */
-case class WinnowSelect(child: Expression, window: Int)
-    extends UnaryExpression {
+case class WinnowSelect(child: Expression, window: Int) extends UnaryKernel {
 
   require(window >= 1, "window must be >= 1")
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+  def sqlName: String = "winnow_select"
+  protected def argTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"winnow_select expects array<bigint>, got $other")
-    }
+  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
 
-  override def nullSafeEval(v: Any): Any =
-    compute(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  def compute(v: org.apache.spark.sql.catalyst.util.ArrayData)
-      : GenericArrayData = {
+  def compute(v: ArrayData): GenericArrayData = {
     val n = v.numElements()
     if (n == 0) return new GenericArrayData(Array.emptyIntArray)
     val w = if (n >= window) window else n
@@ -393,11 +277,6 @@ case class WinnowSelect(child: Expression, window: Int)
     new GenericArrayData(java.util.Arrays.copyOf(out, cnt))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnowSelect", this)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -418,26 +297,15 @@ case class WinnowSelect(child: Expression, window: Int)
   * pass normalized names/titles/lines). Inputs are guarded at 4096
   * chars: the matrix is O(|a|·|b|) and a document-pair calls for
   * shingle dedup, not edit distance. */
-case class DamerauLevenshtein(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+case class DamerauLevenshtein(left: Expression, right: Expression) extends BinaryKernel {
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: org.apache.spark.sql.types.StringType,
-            _: org.apache.spark.sql.types.StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"damerau_levenshtein expects two string columns, got $other")
-    }
+  def sqlName: String = "damerau_levenshtein"
+  protected def argTypes: Seq[DataType] = Seq(StringType, StringType)
+  override def dataType: DataType = IntegerType
 
   override def nullSafeEval(l: Any, r: Any): Any =
     compute(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
 
-  // see ShingleHashes.compute — the direct codegen call target
   def compute(lu: UTF8String, ru: UTF8String): Int = {
     val a = lu.toString
     val b = ru.toString
@@ -493,12 +361,6 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
     d((la + 1) * w + lb + 1)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("damerauLevenshtein", this)
-    nullSafeCodeGen(ctx, ev,
-      (l, r) => s"${ev.value} = $ref.compute($l, $r);")
-  }
-
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
@@ -521,26 +383,15 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
   *
   * UTF-16 code units (= code points on BMP text); 4096-char guard —
   * the match scan is O(|a|·window). */
-case class JaroWinkler(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+case class JaroWinkler(left: Expression, right: Expression) extends BinaryKernel {
 
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (_: org.apache.spark.sql.types.StringType,
-            _: org.apache.spark.sql.types.StringType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"jaro_winkler expects two string columns, got $other")
-    }
+  def sqlName: String = "jaro_winkler"
+  protected def argTypes: Seq[DataType] = Seq(StringType, StringType)
+  override def dataType: DataType = DoubleType
 
   override def nullSafeEval(l: Any, r: Any): Any =
     compute(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
 
-  // see ShingleHashes.compute — the direct codegen call target
   def compute(lu: UTF8String, ru: UTF8String): Double = {
     val a = lu.toString
     val b = ru.toString
@@ -592,12 +443,6 @@ case class JaroWinkler(left: Expression, right: Expression)
       j = j + l * 0.1 * (1.0 - j)
     }
     j
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jaroWinkler", this)
-    nullSafeCodeGen(ctx, ev,
-      (l, r) => s"${ev.value} = $ref.compute($l, $r);")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,

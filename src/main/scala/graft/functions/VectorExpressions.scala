@@ -1,49 +1,52 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, LongType}
+
+// Vector kernels. Each expression here is evaluated by one kernel, its
+// `compute` method ([[Kernel]]): eval calls it and the generated code is
+// one call to it, so there is no second, Java-string copy of the loop.
+
+private object Vectors {
+  val Floats: DataType = ArrayType(FloatType)
+
+  /** The shared length of two vectors; a mismatch (two embedding models,
+    * a corrupt row) fails loudly, since truncating to the shorter vector
+    * would rank with a plausible but wrong similarity. */
+  def sameDims(name: String, what: String, nx: Int, ny: Int): Int = {
+    if (nx != ny) throw new IllegalArgumentException(
+      s"$name: $what dimensions differ ($nx vs $ny)")
+    nx
+  }
+}
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<float>` columns (SURVEY.md §2B X27 hot path).
   *
   * The composed form — `aggregate(zip_with(a, b, _*_), 0d, _+_)` — allocates
   * an intermediate array and evaluates a boxed lambda per element outside
-  * whole-stage codegen. This expression generates a single fused primitive
-  * loop (dot and both norms in one pass), keeping the similarity scan inside
+  * whole-stage codegen. This kernel is a single fused primitive loop (dot
+  * and both norms in one pass), keeping the similarity scan inside
   * WholeStageCodegen. Identical left-to-right summation order, so results
-  * are bit-equal to the composed form (asserted by VectorExprSpec).
+  * are bit-equal to the composed form (asserted by VectorExprSpec). A
+  * zero-norm side gives null.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim expects (array<float>, array<float>), " +
-        s"got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
+  def sqlName: String = "cosine_sim"
+  protected def argTypes: Seq[DataType] = Seq(Vectors.Floats, Vectors.Floats)
+  override protected def kernelReturnsNull: Boolean = true
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // same loud-failure contract as int8_dot: truncating a dimension
-    // mismatch (two embedding models, a corrupt row) would rank with a
-    // plausible but wrong similarity
-    if (x.numElements() != y.numElements())
-      throw new IllegalArgumentException(
-        s"cosine_sim: vector dimensions differ (${x.numElements()} vs ${y.numElements()})")
-    val n = x.numElements()
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = Vectors.sameDims(sqlName, "vector", x.numElements(), y.numElements())
     var dot = 0.0
     var nx = 0.0
     var ny = 0.0
@@ -60,35 +63,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val denom = ctx.freshName("denom")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "cosine_sim: vector dimensions differ (" + $x.numElements() +
-         |    " vs " + $y.numElements() + ")");
-         |}
-         |int $n = $x.numElements();
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $x.getFloat($i);
-         |  double $yv = (double) $y.getFloat($i);
-         |  $dot += $xv * $yv; $nx += $xv * $xv; $ny += $yv * $yv;
-         |}
-         |double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |if ($denom == 0.0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $dot / $denom; }
-       """.stripMargin
-    })
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -100,57 +74,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * 3× the arithmetic in an all-pairs scan). Identical left-to-right fold,
   * so `dot(a,b)/(norm(a)*norm(b))` is bit-equal to `cosine_sim(a,b)`. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dot_product expects (array<float>, array<float>), " +
-        s"got (${left.dataType.sql}, ${right.dataType.sql})")
-  }
+  def sqlName: String = "dot_product"
+  protected def argTypes: Seq[DataType] = Seq(Vectors.Floats, Vectors.Floats)
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    // loud failure on dimension mismatch, like cosine_sim/int8_dot
-    if (x.numElements() != y.numElements())
-      throw new IllegalArgumentException(
-        s"dot_product: vector dimensions differ (${x.numElements()} vs ${y.numElements()})")
-    val n = x.numElements()
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  def compute(x: ArrayData, y: ArrayData): Double = {
+    val n = Vectors.sameDims(sqlName, "vector", x.numElements(), y.numElements())
     var dot = 0.0
     var i = 0
     while (i < n) {
       dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble
       i += 1
     }
-    java.lang.Double.valueOf(dot)
+    dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "dot_product: vector dimensions differ (" + $x.numElements() +
-         |    " vs " + $y.numElements() + ")");
-         |}
-         |int $n = $x.numElements();
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -166,26 +108,19 @@ case class DotProduct(left: Expression, right: Expression)
   * non-positive scale (zero vector) yields NULL, and values beyond the
   * byte range (an undersized/stale scale) SATURATE to ±127 like every
   * standard int8 quantizer — never two's-complement wrap-around, which
-  * would silently flip signs. One fused primitive loop inside
-  * WholeStageCodegen. */
+  * would silently flip signs. */
 case class PackInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pack_int8 expects (array<float>, double), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-  override def nullable: Boolean = true
+  def sqlName: String = "pack_int8"
+  protected def argTypes: Seq[DataType] = Seq(Vectors.Floats, DoubleType)
+  override protected def kernelReturnsNull: Boolean = true
+  override def dataType: DataType = BinaryType
 
-  override def nullSafeEval(a: Any, s: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val scale = s.asInstanceOf[Double]
+  override def nullSafeEval(a: Any, s: Any): Any =
+    compute(a.asInstanceOf[ArrayData], s.asInstanceOf[Double])
+
+  def compute(x: ArrayData, scale: Double): Array[Byte] =
     if (scale <= 0.0) null
     else {
       val n = x.numElements()
@@ -198,28 +133,6 @@ case class PackInt8(left: Expression, right: Expression)
       }
       out
     }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, s) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |if ($s <= 0.0) { ${ev.isNull} = true; }
-         |else {
-         |  int $n = $x.numElements();
-         |  byte[] $out = new byte[$n];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long ${i}_q = (long) java.lang.Math.floor(
-         |      (double) $x.getFloat($i) / $s + 0.5);
-         |    $out[$i] = (byte) java.lang.Math.max(-127L,
-         |      java.lang.Math.min(127L, ${i}_q));
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -231,44 +144,24 @@ case class PackInt8(left: Expression, right: Expression)
   * path. Reconstruction error per element is bounded by `scale / 2`
   * (asserted in VectorExprSpec). */
 case class UnpackInt8(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (org.apache.spark.sql.types.BinaryType, DoubleType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"unpack_int8 expects (binary, double), got (${l.sql}, ${r.sql})")
-    }
+  def sqlName: String = "unpack_int8"
+  protected def argTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
 
-  override def nullSafeEval(a: Any, s: Any): Any = {
-    val bytes = a.asInstanceOf[Array[Byte]]
-    val scale = s.asInstanceOf[Double]
+  override def nullSafeEval(a: Any, s: Any): Any =
+    compute(a.asInstanceOf[Array[Byte]], s.asInstanceOf[Double])
+
+  def compute(bytes: Array[Byte], scale: Double): ArrayData = {
     val out = new Array[Float](bytes.length)
     var i = 0
     while (i < bytes.length) {
       out(i) = (bytes(i) * scale).toFloat
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, s) => {
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-         |float[] $out = new float[$x.length];
-         |for (int $i = 0; $i < $x.length; $i++) {
-         |  $out[$i] = (float)($x[$i] * $s);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -282,52 +175,22 @@ case class UnpackInt8(left: Expression, right: Expression)
   * cosine over packed vectors needs no scales at all — they cancel:
   * `cos(q_a·s_a, q_b·s_b) = dot8(q_a,q_b) / (√dot8(q_a,q_a)·√dot8(q_b,q_b))`. */
 case class Int8DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (org.apache.spark.sql.types.BinaryType,
-            org.apache.spark.sql.types.BinaryType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"int8_dot expects (binary, binary), got (${l.sql}, ${r.sql})")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  def sqlName: String = "int8_dot"
+  protected def argTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
+  override def dataType: DataType = LongType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    // a packed-dimension mismatch is always a caller bug (vectors quantized
-    // from different models/dims); truncating to the shorter vector would
-    // return a plausible but wrong similarity — fail loudly instead
-    if (x.length != y.length)
-      throw new IllegalArgumentException(
-        s"int8_dot: packed vector dimensions differ (${x.length} vs ${y.length})")
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+
+  def compute(x: Array[Byte], y: Array[Byte]): Long = {
+    val n = Vectors.sameDims(sqlName, "packed vector", x.length, y.length)
     var dot = 0L
     var i = 0
-    while (i < x.length) { dot += x(i).toLong * y(i).toLong; i += 1 }
-    java.lang.Long.valueOf(dot)
+    while (i < n) { dot += x(i).toLong * y(i).toLong; i += 1 }
+    dot
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($x.length != $y.length) {
-         |  throw new IllegalArgumentException(
-         |    "int8_dot: packed vector dimensions differ (" + $x.length +
-         |    " vs " + $y.length + ")");
-         |}
-         |long $dot = 0L;
-         |for (int $i = 0; $i < $x.length; $i++) {
-         |  $dot += (long) $x[$i] * (long) $y[$i];
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -17,7 +17,8 @@ final case class ReplayConfig(
     statisticsFrequencyMillis: Long = 20000L, // RePlayer.java:24
     // Hard capacity of the streaming reorder buffer (RePlayer.java:26, the
     // reference's 100k bounded queue); the batch path has no in-process
-    // buffer (total sort) so it ignores this.
+    // buffer (Spark's shuffle sorts each hashed sender lane) so it
+    // ignores this.
     readerBufferSize: Int = 100000,
     senderParallelism: Int = 4, // RePlayer.java:28 — sink partition count
     objectSuffixToSkip: String = "README.md", // JsonEventS3Iterator.java:71-73

@@ -32,7 +32,8 @@ object Source {
     * nothing for those. An empty suffix skips nothing (endsWith("") is
     * vacuously true of every path — "skip everything" can never be the
     * intent of an empty CLI value). The streaming path applies the same
-    * decoded-path semantics (StreamingReplay.run). */
+    * decoded-path semantics in its input filter (the private
+    * `StreamingReplay.lines`). */
   def listFiles(spark: SparkSession, path: String, suffixToSkip: String): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

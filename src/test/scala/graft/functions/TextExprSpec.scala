@@ -8,8 +8,24 @@ import org.apache.spark.sql.functions._
 class TextExprSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
+  // tokenizer edge cases: runs of spaces, leading and trailing spaces, a
+  // tab (not a separator), uppercase non-ASCII (dotted İ, final sigma)
+  private val edgeTexts = Seq(
+    "runs   of    spaces  between   the words",
+    "   leading and trailing spaces here   ",
+    "a\ttab is\tnot a separator at all",
+    "İSTANBUL ΣΑΣ ΟΔΟΣ ΣΑΣ İSTANBUL ΣΑΣ")
+
+  /** The fixture documents plus [[edgeTexts]] under negative doc ids. */
+  private def docsWithEdges = {
+    import spark.implicits._
+    Tables.t(spark, d, "documents").select(col("doc_id"), col("text"))
+      .union(edgeTexts.zipWithIndex.map { case (t, i) => (-1L - i, t) }
+        .toDF("doc_id", "text"))
+  }
+
   test("native ShingleHashes equals xxhash64 over the composed shingle pipeline") {
-    val docs = Tables.t(spark, d, "documents")
+    val docs = docsWithEdges
     val composed = docs.select(col("doc_id"),
       explode(DedupOps.shingles(DedupOps.tokens(col("text")))).as("sh"))
       .select(col("doc_id"), xxhash64(col("sh")).as("shh"))
@@ -21,7 +37,7 @@ class TextExprSpec extends SparkSpec {
   }
 
   test("native TokenBigrams equals the composed zip_with adjacency pipeline") {
-    val docs = Tables.t(spark, d, "documents")
+    val docs = docsWithEdges
     val tk = DedupOps.tokens(col("text"))
     val adjacent = filter(
       zip_with(tk, slice(tk, lit(2), size(tk)),
@@ -49,7 +65,7 @@ class TextExprSpec extends SparkSpec {
   }
 
   test("native Sha32MinHashSigs equals the composed sha32 signature pipeline") {
-    val docs = Tables.t(spark, d, "documents")
+    val docs = docsWithEdges
     // the composed form persistShaSignatures used through round 6 — the
     // oracle-green reference the single-pass expression must bit-match
     val sha32 = conv(substring(sha2(col("sh"), 256), 1, 8), 16, 10).cast("long")
@@ -105,7 +121,7 @@ class TextExprSpec extends SparkSpec {
       "the quick brown fox jumps over the lazy dog",
       "a b c", "one two", "", "  spaced   OUT   here  and  more  ",
       "Mixed CASE Tokens repeat repeat repeat repeat",
-      "unicode ü tokens é here ß again ü tokens é here")
+      "unicode ü tokens é here ß again ü tokens é here") ++ edgeTexts
     val df = texts.toDF("text")
     val k = 3
     val composed = df
